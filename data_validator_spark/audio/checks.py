@@ -17,6 +17,10 @@ Scale notes:
     deterministic repartition so task retries are stable).
   - per-row work is O(samples); the UDF releases each batch promptly
     (no accumulation across batches).
+  - the batch's FLAC rows decode together (codecs.decode_batch ->
+    flac.decode_flac_batch), in chunks of about 4 MiB of payload so
+    the batch-wide bit arrays stay bounded; the other rows decode one
+    at a time as the loop reaches them.
 """
 
 from __future__ import annotations
@@ -101,15 +105,13 @@ def _check_batch(
     codecs_col = pdf["codec"].to_numpy()
     payloads = pdf["bytes"].to_numpy()
     skips = pdf["skip"].to_numpy()
-    for i in range(n):
-        if skips[i]:
+    outcomes = codecs.decode_batch(codecs_col, payloads, plugins, skips)
+    for i, res in enumerate(outcomes):
+        if res is None:
             continue
-        payload = payloads[i]
-        try:
-            pcm, sr = codecs.decode(codecs_col[i], payload, plugins=plugins)
-        except codecs.PcmUnsupportedError:
+        if isinstance(res, codecs.PcmUnsupportedError):
             meta = codecs.inspect_metadata(
-                codecs_col[i], payload, inspectors=inspectors
+                codecs_col[i], payloads[i], inspectors=inspectors
             )
             if meta is None:
                 err[i] = "pcm decode unsupported, no metadata tier"
@@ -125,9 +127,10 @@ def _check_batch(
                             meta["duration_ms"] / 1000.0 * in_sr
                         ))
             continue
-        except codecs.CodecError as e:
-            err[i] = str(e)
+        if isinstance(res, codecs.CodecError):
+            err[i] = str(res)
             continue
+        pcm, sr = res
         csr[i] = sr
         nsm[i] = len(pcm)
         ref = synth.reference_pcm(str(clip_ids[i]), int(sr), len(pcm))

@@ -480,6 +480,46 @@ def decode(
         raise CodecError(f"{codec}: {e}") from e
 
 
+def decode_batch(codec_col, payloads, plugins: dict | None = None, skip=None):
+    """Decode a batch of rows -> an iterator with one outcome per row,
+    in row order: None for a row whose `skip` is set, (pcm, sr_hz) when
+    it decoded, or the CodecError that `decode` raised for it (a
+    PcmUnsupportedError for metadata-tier codecs).
+
+    The outcomes equal per-row `decode(codec, payload, plugins)`. FLAC
+    rows decode together first (flac.decode_flac_batch) unless a plug-in
+    or a registered decoder overrides flac; rows the batch decoder does
+    not accept decode per row, which also gives them decode's error
+    text. The other rows decode lazily, as the iterator reaches them."""
+    n = len(payloads)
+    skip = np.zeros(n, dtype=bool) if skip is None else skip
+    done: dict = {}
+    if ((plugins or {}).get("flac") or _DECODERS.get("flac")) is _decode_flac:
+        rows = [
+            i for i in range(n)
+            if not skip[i] and codec_col[i] == "flac" and payloads[i] is not None
+        ]
+        try:
+            got = _flac.decode_flac_batch([bytes(payloads[i]) for i in rows])
+        except Exception:  # never fail a batch: decode the rows one by one
+            import traceback
+
+            traceback.print_exc()
+            got = []
+        done = {i: r for i, r in zip(rows, got) if r is not None}
+    for i in range(n):
+        if skip[i]:
+            yield None
+            continue
+        out = done.pop(i, None)
+        if out is None:
+            try:
+                out = decode(codec_col[i], payloads[i], plugins=plugins)
+            except CodecError as e:
+                out = e
+        yield out
+
+
 def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:
     """10*log10(sum(ref^2) / sum((ref-dec)^2)); inf when identical.
 

@@ -22,16 +22,26 @@ codec in operators/imaging.py:
       restored by vectorized cumsum).
 
 Everything is vectorized where it is hot: rice encode builds the bit
-array with numpy cumsum/scatter (no per-sample python loop); rice
-decode is a two-pass scheme — terminator positions hop through a
-precomputed one-count (rank) array at two O(1) scalar reads per code,
-then one numpy gather decodes every low-bit field at once; frame
-CRC-16s over >=2 KiB run as a numpy tree reduction (per-word
-positional tables + per-level shift tables). Reference counterpart
-for WHY this codec
-exists: the per-row decoded-PCM invariant the validation engine
-checks (BASELINE.json input_hint; reference rt-bounds
-core_models.py:169-202).
+array with numpy cumsum/scatter (no per-sample python loop). Two
+decoders share the header, subframe and finishing code:
+
+  decode_flac (one stream): rice decode is a two-pass scheme —
+      terminator positions hop through a precomputed one-count (rank)
+      array at two O(1) scalar reads per code, then one numpy gather
+      decodes every low-bit field at once; frame CRC-16s over >=2 KiB
+      run as a numpy tree reduction (per-word positional tables +
+      per-level shift tables).
+  decode_flac_batch (many streams, the decode UDFs' path): every
+      byte-aligned sync code of every stream is a candidate frame;
+      the rice partitions of all candidates advance in numpy lockstep,
+      one code per lane per step, over 64-bit windows of the batch's
+      bytes; CRC-16s of all chained frames reduce together. Streams
+      whose frames do not chain exactly, or fail any check, go to
+      decode_flac, so both decoders give identical results.
+
+Reference counterpart for WHY this codec exists: the per-row
+decoded-PCM invariant the validation engine checks (BASELINE.json
+input_hint; reference rt-bounds core_models.py:169-202).
 """
 
 from __future__ import annotations
@@ -96,7 +106,8 @@ def _make_crc16_table2() -> tuple[int, ...]:
 
 _CRC16_TABLE2 = _make_crc16_table2()
 
-# Vectorized CRC-16 (used for payloads >= _CRC16_VEC_MIN bytes): CRC is
+# Vectorized CRC-16 (for segments >= _CRC16_VEC_MIN bytes, and for all
+# frames of a batch at once in decode_flac_batch): CRC is
 # linear over GF(2) with init 0, so crc(A||B) = shift_{|B|}(crc(A)) ^
 # crc(B) and leading zero bytes are free. The kernel computes per-8-byte
 # word CRCs with positional tables, then tree-reduces words pairwise
@@ -104,6 +115,7 @@ _CRC16_TABLE2 = _make_crc16_table2()
 # decomposition of the 16-bit state keeps every table 256 entries).
 # All numpy gathers — no per-byte python loop.
 _CRC16_VEC_MIN = 2048  # measured crossover vs the slice-by-2 loop
+_CRC_MATRIX_BYTES = 1 << 20  # padded segment bytes reduced together
 _CRC16_VEC: list | None = None
 
 
@@ -143,27 +155,38 @@ def _make_crc16_vec_tables(n_levels: int = 22) -> list:
     return [pos, his, los]
 
 
-def _crc16_vec(b: np.ndarray) -> int:
+def _crc16_many(buf: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """CRC-16 of every segment buf[starts[i]:ends[i]] -> uint16 array.
+    Segments with the same power-of-two word count are front-padded
+    with zeros (free for a zero-init CRC) into one matrix, at most
+    _CRC_MATRIX_BYTES at a time, and reduced together."""
     global _CRC16_VEC
     if _CRC16_VEC is None:
         _CRC16_VEC = _make_crc16_vec_tables()
     pos, his, los = _CRC16_VEC
-    n = len(b)
-    nw = -(-n // 8)
-    p2w = 1 << (nw - 1).bit_length() if nw > 1 else 1
-    pad = p2w * 8 - n
-    if pad:  # front-pad: leading zeros leave the CRC unchanged
-        b = np.concatenate([np.zeros(pad, np.uint8), b])
-    w = b.reshape(-1, 8)
-    c = pos[0][w[:, 0]]
-    for j in range(1, 8):
-        c ^= pos[j][w[:, j]]
-    lvl = 0
-    while len(c) > 1:
-        a = c[0::2]
-        c = (his[lvl][a >> 8] ^ los[lvl][a & 0xFF]) ^ c[1::2]
-        lvl += 1
-    return int(c[0])
+    lens = ends - starts
+    nw = np.maximum(-(-lens // 8), 1)
+    lvls = np.ceil(np.log2(nw)).astype(np.int64)
+    out = np.empty(len(starts), np.uint16)
+    for lvl in np.unique(lvls).tolist():
+        width = 8 << lvl
+        group = np.flatnonzero(lvls == lvl)
+        step = max(1, _CRC_MATRIX_BYTES // width)
+        for g0 in range(0, len(group), step):
+            sel = group[g0 : g0 + step]
+            m = np.zeros((len(sel), width), np.uint8)
+            for row, i in enumerate(sel.tolist()):
+                a, b = int(starts[i]), int(ends[i])
+                m[row, width - (b - a) :] = buf[a:b]
+            w = m.reshape(len(sel), -1, 8)
+            c = pos[0][w[:, :, 0]]
+            for j in range(1, 8):
+                c ^= pos[j][w[:, :, j]]
+            for t in range(lvl):
+                a = c[:, 0::2]
+                c = (his[t][a >> 8] ^ los[t][a & 0xFF]) ^ c[:, 1::2]
+            out[sel] = c[:, 0]
+    return out
 
 
 def crc8(data) -> int:
@@ -175,11 +198,10 @@ def crc8(data) -> int:
 
 
 def crc16(data) -> int:
-    if isinstance(data, np.ndarray) and len(data) >= _CRC16_VEC_MIN:
-        return _crc16_vec(data)
+    if len(data) >= _CRC16_VEC_MIN:
+        arr = data if isinstance(data, np.ndarray) else np.frombuffer(bytes(data), np.uint8)
+        return int(_crc16_many(arr, np.zeros(1, np.int64), np.array([len(arr)]))[0])
     b = bytes(data)
-    if len(b) >= _CRC16_VEC_MIN:
-        return _crc16_vec(np.frombuffer(b, np.uint8))
     c = 0
     t2 = _CRC16_TABLE2
     n2 = len(b) & ~1
@@ -521,6 +543,8 @@ def encode_flac(
     sr_hz = int(sr_hz)
     if not (1 <= sr_hz < (1 << 20)):
         raise FlacError(f"sample rate {sr_hz} out of FLAC range")
+    if lpc_order is not None and not 1 <= lpc_order <= 32:
+        raise FlacError(f"lpc_order {lpc_order} outside 1..32")
     i16 = (np.clip(np.asarray(pcm, np.float64), -1.0, 1.0) * 32767.0).round()
     x_all = i16.astype(np.int64)
     n_total = len(x_all)
@@ -580,7 +604,7 @@ def _restore_fixed(warm: np.ndarray, res: np.ndarray, order: int) -> np.ndarray:
     """Invert the order-o finite difference: o cumulative sums, each
     seeded from the warmup's difference pyramid."""
     if order == 0:
-        return res
+        return res.astype(np.int64, copy=False)
     pyramid = [warm.astype(np.int64)]
     for _ in range(order - 1):
         pyramid.append(np.diff(pyramid[-1]))
@@ -774,7 +798,26 @@ def _sign_extend(v: int, width: int) -> int:
     return v - (1 << width) if v >= (1 << (width - 1)) else v
 
 
-def _read_subframe(r: _BitReader, bs: int, bps: int) -> np.ndarray:
+class _Subframe:
+    """A parsed subframe header: everything before the sample body
+    (VERBATIM samples or the residual)."""
+
+    __slots__ = ("kind", "wasted", "eff", "order", "warm", "coefs", "shift",
+                 "value")
+
+    def __init__(self, kind, wasted, eff, order=0, warm=None, coefs=None,
+                 shift=0, value=0):
+        self.kind = kind  # 0 CONSTANT, 1 VERBATIM, 8 FIXED, 32 LPC
+        self.wasted = wasted
+        self.eff = eff
+        self.order = order
+        self.warm = warm
+        self.coefs = coefs
+        self.shift = shift
+        self.value = value
+
+
+def _read_subframe_header(r, bs: int, bps: int) -> _Subframe:
     if r.read(1):
         raise FlacError("subframe padding bit set")
     t = r.read(6)
@@ -785,17 +828,16 @@ def _read_subframe(r: _BitReader, bs: int, bps: int) -> np.ndarray:
     if eff <= 0:
         raise FlacError("wasted bits exceed sample size")
     if t == 0:  # CONSTANT
-        x = np.full(bs, _sign_extend(r.read(eff), eff), np.int64)
-    elif t == 1:  # VERBATIM
-        x = r.read_signed_array(bs, eff)
-    elif 8 <= t <= 12:  # FIXED order 0..4
+        return _Subframe(0, wasted, eff, value=_sign_extend(r.read(eff), eff))
+    if t == 1:  # VERBATIM
+        return _Subframe(1, wasted, eff)
+    if 8 <= t <= 12:  # FIXED order 0..4
         order = t - 8
         if order > bs:
             raise FlacError("fixed order exceeds blocksize")
         warm = r.read_signed_array(order, eff)
-        res = _read_residual(r, bs, order)
-        x = _restore_fixed(warm, res, order)
-    elif t >= 32:  # LPC, order 1..32
+        return _Subframe(8, wasted, eff, order, warm)
+    if t >= 32:  # LPC, order 1..32
         order = t - 31
         if order > bs:
             raise FlacError("lpc order exceeds blocksize")
@@ -810,19 +852,37 @@ def _read_subframe(r: _BitReader, bs: int, bps: int) -> np.ndarray:
             # encoder emits them (libFLAC clamps at 0)
             raise FlacError("negative LPC shift")
         coefs = r.read_signed_array(order, prec)
-        res = _read_residual(r, bs, order)
-        # defer restoration: same-shaped LPC subframes across the
-        # stream restore together in one vectorized batch
-        return _DeferredLpc(warm, coefs, shift, res, wasted)
+        return _Subframe(32, wasted, eff, order, warm, coefs, shift)
+    raise FlacError("reserved subframe type")
+
+
+def _subframe_samples(sub: _Subframe, bs: int, body):
+    """Samples of a subframe from its header and body (VERBATIM samples
+    or the residual). LPC subframes come back as _DeferredLpc: same-
+    shaped LPC subframes of a stream restore together in one batch."""
+    if sub.kind == 0:
+        x = np.full(bs, sub.value, np.int64)
+    elif sub.kind == 1:
+        x = body
+    elif sub.kind == 8:
+        x = _restore_fixed(sub.warm, body, sub.order)
     else:
-        raise FlacError("reserved subframe type")
-    return x << wasted if wasted else x
+        return _DeferredLpc(sub.warm, sub.coefs, sub.shift, body, sub.wasted)
+    return x << sub.wasted if sub.wasted else x
 
 
-def decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
-    """FLAC bytes -> (mono float32 pcm in [-1, 1], sr_hz). Verifies
-    frame sync, header CRC-8, frame CRC-16 and the STREAMINFO MD5."""
-    payload = bytes(payload)
+def _read_subframe(r: _BitReader, bs: int, bps: int):
+    sub = _read_subframe_header(r, bs, bps)
+    body = None
+    if sub.kind == 1:
+        body = r.read_signed_array(bs, sub.eff)
+    elif sub.kind >= 8:
+        body = _read_residual(r, bs, sub.order)
+    return _subframe_samples(sub, bs, body)
+
+
+def _read_metadata(payload: bytes) -> tuple[dict, int]:
+    """-> (STREAMINFO fields, byte offset of the first frame)."""
     if len(payload) < 42 or payload[:4] != MAGIC:
         raise FlacError("not a FLAC payload")
     pos = 4
@@ -844,7 +904,8 @@ def decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
             bps = (((body[12] & 1) << 4) | (body[13] >> 4)) + 1
             total = ((body[13] & 0x0F) << 32) | int.from_bytes(body[14:18], "big")
             streaminfo = {"sr": sr, "ch": n_ch, "bps": bps,
-                          "total": total, "md5": body[18:34]}
+                          "total": total, "md5": body[18:34],
+                          "max_bs": int.from_bytes(body[2:4], "big")}
         pos += 4 + blen
         if hdr & 0x80:
             break
@@ -852,10 +913,94 @@ def decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
         raise FlacError("missing STREAMINFO")
     if streaminfo["ch"] != 1:
         raise FlacError("only mono FLAC subset supported")
-    bps0 = streaminfo["bps"]
     if streaminfo["sr"] <= 0:
         raise FlacError("invalid sample rate in STREAMINFO")
+    return streaminfo, pos
 
+
+def _read_frame_header(r, si: dict, frame_start: int,
+                       expect: tuple[int, int] | None = None) -> tuple:
+    """Frame header at the reader's (byte-aligned) position, through its
+    CRC-8 -> (blocksize, bits per sample, blocking strategy, frame or
+    sample number). `expect` = (frame index, samples decoded so far)
+    checks the number against the stream's sequence; the batch decoder
+    passes None and checks the sequence when it chains frames."""
+    if r.read(14) != 0b11111111111110:
+        raise FlacError("bad frame sync")
+    if r.read(1):
+        raise FlacError("reserved header bit set")
+    blocking = r.read(1)
+    bs_code = r.read(4)
+    sr_code = r.read(4)
+    ch_code = r.read(4)
+    ss_code = r.read(3)
+    if r.read(1):
+        raise FlacError("reserved header bit set")
+    num = _utf8_decode(r)
+    if expect is not None:
+        if blocking == 0 and num != expect[0]:
+            raise FlacError("frame number out of sequence")
+        if blocking == 1 and num != expect[1]:
+            raise FlacError("sample number out of sequence")
+    if bs_code == 0:
+        raise FlacError("reserved blocksize code")
+    elif bs_code == 1:
+        bs = 192
+    elif 2 <= bs_code <= 5:
+        bs = 576 << (bs_code - 2)
+    elif bs_code == 6:
+        bs = r.read(8) + 1
+    elif bs_code == 7:
+        bs = r.read(16) + 1
+    else:
+        bs = 256 << (bs_code - 8)
+    if sr_code in _SR_TABLE:
+        sr = _SR_TABLE[sr_code]
+    elif sr_code == 0:
+        sr = si["sr"]
+    elif sr_code == 12:
+        sr = r.read(8) * 1000
+    elif sr_code == 13:
+        sr = r.read(16)
+    elif sr_code == 14:
+        sr = r.read(16) * 10
+    else:
+        raise FlacError("invalid sample-rate code")
+    if sr != si["sr"]:
+        raise FlacError("frame sample rate disagrees with STREAMINFO")
+    if ch_code != 0:
+        raise FlacError("only mono FLAC subset supported")
+    bps = si["bps"] if ss_code == 0 else _BPS_TABLE.get(ss_code)
+    if bps is None:
+        raise FlacError("unsupported sample-size code")
+    if r.pos % 8:
+        raise FlacError("frame header misaligned")
+    if r.read(8) != crc8(r.raw[frame_start : r.pos // 8 - 1].tobytes()):
+        raise FlacError("frame header CRC-8 mismatch")
+    return bs, bps, blocking, num
+
+
+def _finish(blocks: list, si: dict) -> tuple[np.ndarray, int]:
+    """Frame sample blocks of a whole stream -> (float32 pcm, sr):
+    deferred LPC restoration, the STREAMINFO MD5 check, scaling."""
+    _restore_deferred(blocks)
+    pcm_i = np.concatenate(blocks) if blocks else np.zeros(0, np.int64)
+    bps0 = si["bps"]
+    if si["md5"] != b"\x00" * 16 and bps0 in (8, 16, 24):
+        dtype = {8: "<i1", 16: "<i2", 24: None}[bps0]
+        if dtype is not None:
+            got = hashlib.md5(pcm_i.astype(dtype).tobytes()).digest()
+            if got != si["md5"]:
+                raise FlacError("decoded audio MD5 mismatch")
+    scale = float((1 << (bps0 - 1)) - 1)
+    return (pcm_i / scale).astype(np.float32), si["sr"]
+
+
+def decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
+    """FLAC bytes -> (mono float32 pcm in [-1, 1], sr_hz). Verifies
+    frame sync, header CRC-8, frame CRC-16 and the STREAMINFO MD5."""
+    payload = bytes(payload)
+    streaminfo, pos = _read_metadata(payload)
     r = _BitReader(payload[pos:])
     blocks: list[np.ndarray] = []
     decoded = 0
@@ -864,57 +1009,9 @@ def decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
         if r.pos % 8:
             raise FlacError("frame not byte-aligned")
         frame_start = r.pos // 8
-        if r.read(14) != 0b11111111111110:
-            raise FlacError("bad frame sync")
-        if r.read(1):
-            raise FlacError("reserved header bit set")
-        blocking = r.read(1)
-        bs_code = r.read(4)
-        sr_code = r.read(4)
-        ch_code = r.read(4)
-        ss_code = r.read(3)
-        if r.read(1):
-            raise FlacError("reserved header bit set")
-        num = _utf8_decode(r)
-        if blocking == 0 and num != frame_idx:
-            raise FlacError("frame number out of sequence")
-        if blocking == 1 and num != decoded:
-            raise FlacError("sample number out of sequence")
-        if bs_code == 0:
-            raise FlacError("reserved blocksize code")
-        elif bs_code == 1:
-            bs = 192
-        elif 2 <= bs_code <= 5:
-            bs = 576 << (bs_code - 2)
-        elif bs_code == 6:
-            bs = r.read(8) + 1
-        elif bs_code == 7:
-            bs = r.read(16) + 1
-        else:
-            bs = 256 << (bs_code - 8)
-        if sr_code in _SR_TABLE:
-            sr = _SR_TABLE[sr_code]
-        elif sr_code == 0:
-            sr = streaminfo["sr"]
-        elif sr_code == 12:
-            sr = r.read(8) * 1000
-        elif sr_code == 13:
-            sr = r.read(16)
-        elif sr_code == 14:
-            sr = r.read(16) * 10
-        else:
-            raise FlacError("invalid sample-rate code")
-        if sr != streaminfo["sr"]:
-            raise FlacError("frame sample rate disagrees with STREAMINFO")
-        if ch_code != 0:
-            raise FlacError("only mono FLAC subset supported")
-        bps = bps0 if ss_code == 0 else _BPS_TABLE.get(ss_code)
-        if bps is None:
-            raise FlacError("unsupported sample-size code")
-        if r.pos % 8:
-            raise FlacError("frame header misaligned")
-        if r.read(8) != crc8(r.raw[frame_start : r.pos // 8 - 1].tobytes()):
-            raise FlacError("frame header CRC-8 mismatch")
+        bs, bps, _, _ = _read_frame_header(
+            r, streaminfo, frame_start, (frame_idx, decoded)
+        )
         x = _read_subframe(r, bs, bps)
         pad = (-r.pos) % 8
         if pad and r.read(pad) != 0:
@@ -926,13 +1023,383 @@ def decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
         blocks.append(x)
         decoded += bs
         frame_idx += 1
-    _restore_deferred(blocks)
-    pcm_i = np.concatenate(blocks) if blocks else np.zeros(0, np.int64)
-    if streaminfo["md5"] != b"\x00" * 16 and bps0 in (8, 16, 24):
-        dtype = {8: "<i1", 16: "<i2", 24: None}[bps0]
-        if dtype is not None:
-            got = hashlib.md5(pcm_i.astype(dtype).tobytes()).digest()
-            if got != streaminfo["md5"]:
-                raise FlacError("decoded audio MD5 mismatch")
-    scale = float((1 << (bps0 - 1)) - 1)
-    return (pcm_i / scale).astype(np.float32), streaminfo["sr"]
+    return _finish(blocks, streaminfo)
+
+
+# ------------------------------------------------------------ batch decoder
+#
+# decode_flac_batch decodes many streams at once. Its lanes are FRAMES:
+# every byte-aligned sync code of every stream is a candidate frame, its
+# header (CRC-8 checked) and subframe header are parsed by the serial
+# code above, and the rice partitions of all candidates are then walked
+# in numpy lockstep — one numpy step advances every lane by one code.
+# A stream is accepted only when its frames chain exactly from the
+# first frame to the STREAMINFO total, pass the serial decoder's
+# per-frame checks (CRC-16 in one vectorized reduction) and the MD5;
+# candidates at false sync positions never join a chain. Anything else
+# is left to decode_flac, so accepted streams decode bit-identically
+# and rejected ones get the serial error text.
+
+_HDR_SLICE = 256  # bytes given to one candidate's header parse
+_CHUNK_BYTES = 4 << 20  # payload bytes decoded together (working-set cap)
+_WALK_BLOCK = 128  # lockstep steps between residual extractions
+_UNARY1: np.ndarray | None = None  # built on first use, see _rice_walk
+
+
+class _ScalarBitReader:
+    """_BitReader's scalar interface over a short byte string held as
+    one python int: cheaper than unpacking bits for a header parse."""
+
+    def __init__(self, data: bytes) -> None:
+        self.raw = np.frombuffer(data, np.uint8)
+        self.v = int.from_bytes(data, "big")
+        self.n = len(data) * 8
+        self.pos = 0
+
+    def read(self, k: int) -> int:
+        if k == 0:
+            return 0
+        if self.pos + k > self.n:
+            raise FlacError("truncated stream")
+        self.pos += k
+        return (self.v >> (self.n - self.pos)) & ((1 << k) - 1)
+
+    def read_unary(self) -> int:
+        rest = self.v & ((1 << (self.n - self.pos)) - 1)
+        if not rest:
+            raise FlacError("truncated unary code")
+        t = self.n - rest.bit_length()
+        q = t - self.pos
+        self.pos = t + 1
+        return q
+
+    def read_signed_array(self, count: int, width: int) -> np.ndarray:
+        if self.pos + count * width > self.n:
+            raise FlacError("truncated sample block")
+        return np.array(
+            [_sign_extend(self.read(width), width) if width else 0
+             for _ in range(count)],
+            np.int64,
+        )
+
+
+class _Frame:
+    """One candidate frame of the batch decoder. Bit positions are
+    absolute in the chunk buffer; `parts` collects residual partitions."""
+
+    __slots__ = ("stream", "start", "bs", "blocking", "num", "sub", "pos",
+                 "plen", "po", "parts", "body", "end")
+
+    def __init__(self, stream, start, bs, blocking, num, sub, pos):
+        self.stream = stream
+        self.start = start  # byte offset of the sync code
+        self.bs = bs
+        self.blocking = blocking
+        self.num = num
+        self.sub = sub
+        self.pos = pos  # next unread bit
+        self.plen = self.po = 0
+        self.parts: list = []
+        self.body = None
+        self.end = -1  # byte offset after the CRC-16; -1 = rejected
+
+
+def _bits_at(raw: bytes, pos: int, k: int) -> int:
+    """k bits (k >= 1) at absolute bit position pos of raw."""
+    b0 = pos >> 3
+    b1 = (pos + k + 7) >> 3
+    v = int.from_bytes(raw[b0:b1], "big")
+    return (v >> (b1 * 8 - pos - k)) & ((1 << k) - 1)
+
+
+def _signed_at(raw: bytes, pos: int, count: int, width: int) -> np.ndarray:
+    """count width-bit two's-complement values at bit position pos."""
+    if width == 0:
+        return np.zeros(count, np.int64)
+    end = pos + count * width
+    b0 = pos >> 3
+    bits = np.unpackbits(np.frombuffer(raw[b0 : (end + 7) >> 3], np.uint8))
+    arr = bits[pos - b0 * 8 : end - b0 * 8].reshape(count, width)
+    vals = arr.astype(np.int64) @ (
+        np.int64(1) << np.arange(width - 1, -1, -1, dtype=np.int64)
+    )
+    half = np.int64(1) << (width - 1)
+    return np.where(vals >= half, vals - (half << 1), vals)
+
+
+def _windows(raw: bytes) -> np.ndarray:
+    """W[j] = the 64 bits starting at byte 4*j, big-endian: the bits
+    from any position p are W[p >> 5] << (p & 31), at least 33 valid."""
+    w32 = np.frombuffer(raw + b"\x00" * ((-len(raw)) % 4 + 4), ">u4")
+    W = w32.astype(np.uint64)
+    W <<= np.uint64(32)
+    W[:-1] |= w32[1:]
+    return W
+
+
+def _rice_walk(W: np.ndarray, starts: np.ndarray, ks: np.ndarray,
+               cnts: np.ndarray) -> tuple[list, list]:
+    """Decode cnts[i] rice(ks[i]) codes at bit starts[i] for every lane
+    i in lockstep -> (end bit of each lane, residuals of each lane).
+    Lanes are sorted by code count, so the lanes still walking at any
+    step are a prefix. Positions are kept per step; every _WALK_BLOCK
+    steps one bulk pass turns them into quotients and low bits, which
+    bounds the working set."""
+    n_lanes = len(starts)
+    order = np.argsort(-cnts, kind="stable")
+    cs = cnts[order]
+    k = ks[order].astype(np.uint64)
+    p = starts[order].astype(np.uint64)
+    maxc = int(cs[0])
+    # n_active[i] = number of lanes with more than i codes
+    n_active = np.searchsorted(-cs, -np.arange(1, maxc + 2), side="right")
+    off = np.zeros(n_lanes + 1, np.int64)
+    np.cumsum(cs, out=off[1:])
+    # lane l: flat[off[l]:off[l+1]]; a code has a unary part below 16,
+    # so with k <= 26 every residual fits int32
+    flat = np.empty(int(off[-1]), np.int32 if int(ks.max()) <= 26 else np.int64)
+    ends = np.empty(n_lanes, np.uint64)
+    global _UNARY1
+    if _UNARY1 is None:
+        # unary length + 1 from the top 16 bits of a bit window; an
+        # all-zero top (a unary run of 16 or more, rare under a fitted
+        # rice parameter) pushes the lane past every stream end, so its
+        # frame is rejected and its stream goes to the serial decoder
+        top = np.arange(1 << 16)
+        top[0] = 1
+        _UNARY1 = (16 - np.floor(np.log2(top))).astype(np.uint64)
+        _UNARY1[0] = 1 << 40
+    s5, m31, s48, u64 = np.uint64(5), np.uint64(31), np.uint64(48), np.uint64(64)
+    take_w, take_u = W.take, _UNARY1.take
+    for b0 in range(0, maxc, _WALK_BLOCK):
+        b1 = min(b0 + _WALK_BLOCK, maxc)
+        n0 = int(n_active[b0])
+        P = np.zeros((b1 - b0 + 1, n0), np.uint64)
+        P[0] = p[:n0]
+        kb = k[:n0]
+        for i, n in enumerate(n_active[b0:b1].tolist()):
+            row = P[i, :n]
+            nxt = P[i + 1, :n]
+            w = take_w((row >> s5).view(np.int64), mode="clip")
+            w <<= row & m31
+            w >>= s48
+            np.add(row, take_u(w.view(np.int64)), out=nxt)
+            nxt += kb[:n]
+        # code i spans [P[i], P[i+1]): unary zeros, the terminator, then
+        # k low bits ending at P[i+1]
+        lo = P[1:] - kb
+        q = lo - P[:-1] - np.uint64(1)
+        w = np.take(W, (lo >> s5).view(np.int64), mode="clip") << (lo & m31)
+        u = ((q << kb) | (w >> (u64 - kb))).view(np.int64)
+        res = (u >> 1) ^ -(u & 1)
+        n1 = int(n_active[b1])  # lanes that walk on past this block
+        if n1:
+            flat[off[:n1, None] + np.arange(b0, b1)] = res[:, :n1].T
+        for lane in range(n1, n0):
+            c = int(cs[lane])
+            flat[off[lane] + b0 : off[lane] + c] = res[: c - b0, lane]
+            ends[lane] = P[c - b0, lane]
+        p[:n1] = P[-1, :n1]
+    inv = np.empty(n_lanes, np.int64)
+    inv[order] = np.arange(n_lanes)
+    offs = off.tolist()
+    return (
+        ends[inv].tolist(),
+        [flat[offs[j] : offs[j + 1]] for j in inv.tolist()],
+    )
+
+
+def _parse_candidate(raw: bytes, c: int, stop: int, si: dict, stream: int):
+    """Header, subframe header and residual header of the candidate
+    frame at byte c (the stream's audio ends at byte stop) -> _Frame,
+    or None when the serial decoder would reject a frame here."""
+    r = _ScalarBitReader(raw[c : min(c + _HDR_SLICE, stop)])
+    try:
+        bs, bps, blocking, num = _read_frame_header(r, si, 0)
+        if bs > si["max_bs"]:
+            # the longest lane sets the walk's step count, so a false
+            # candidate may not outgrow the stream's declared frames
+            return None
+        sub = _read_subframe_header(r, bs, bps)
+        f = _Frame(stream, c, bs, blocking, num, sub, c * 8 + r.pos)
+        if sub.kind >= 8:
+            method = r.read(2)
+            if method > 1:
+                return None
+            po = r.read(4)
+            nparts = 1 << po
+            if bs % nparts or (bs >> po) <= sub.order and nparts > 1:
+                return None
+            f.plen, f.po = 4 + method, po
+            f.pos = c * 8 + r.pos
+    except FlacError:
+        return None
+    return f
+
+
+def _decode_bodies(raw: bytes, W: np.ndarray, frames: list, limits: list) -> None:
+    """Read the body of every candidate frame: VERBATIM samples directly,
+    residual partitions round by round (round j reads partition j of
+    every frame still going, and walks all its rice partitions in
+    lockstep). Sets f.end, or leaves it -1 when the frame cannot be
+    read within its stream. `limits` holds each stream's end bit."""
+    pending = []
+    for f in frames:
+        if f.sub.kind == 1:
+            end = f.pos + f.bs * f.sub.eff
+            if end > limits[f.stream]:
+                f.pos = -1
+                continue
+            f.body = _signed_at(raw, f.pos, f.bs, f.sub.eff)
+            f.pos = end
+        elif f.sub.kind >= 8:
+            pending.append(f)
+    j = 0
+    while pending:
+        walk, going = [], []
+        for f in pending:
+            limit = limits[f.stream]
+            cnt = (f.bs >> f.po) - (f.sub.order if j == 0 else 0)
+            if f.pos + f.plen > limit:
+                f.pos = -1
+                continue
+            k = _bits_at(raw, f.pos, f.plen)
+            f.pos += f.plen
+            if k != (1 << f.plen) - 1:
+                if cnt * (k + 1) > limit - f.pos:  # each code takes k+1 bits
+                    f.pos = -1
+                    continue
+                if cnt:
+                    walk.append((f, k, cnt))
+                    continue
+                f.parts.append(np.zeros(0, np.int64))
+            else:  # escaped partition: 5-bit width, then raw values
+                width = _bits_at(raw, f.pos, 5) if f.pos + 5 <= limit else -1
+                end = f.pos + 5 + cnt * width
+                if width < 0 or end > limit:
+                    f.pos = -1
+                    continue
+                f.parts.append(_signed_at(raw, f.pos + 5, cnt, width))
+                f.pos = end
+            going.append(f)
+        if walk:
+            ends, parts = _rice_walk(
+                W,
+                np.array([w[0].pos for w in walk], np.int64),
+                np.array([w[1] for w in walk], np.int64),
+                np.array([w[2] for w in walk], np.int64),
+            )
+            for (f, _, _), e, part in zip(walk, ends, parts):
+                if e > limits[f.stream]:
+                    f.pos = -1
+                    continue
+                f.parts.append(part)
+                f.pos = e
+                going.append(f)
+        j += 1
+        pending = []
+        for f in going:
+            if j < (1 << f.po):
+                pending.append(f)
+            else:
+                f.body = f.parts[0] if len(f.parts) == 1 else np.concatenate(f.parts)
+    for f in frames:
+        if f.pos < 0 or (f.sub.kind >= 8 and f.body is None):
+            continue
+        limit = limits[f.stream]
+        pad = (-f.pos) % 8
+        if pad and (f.pos + pad > limit or _bits_at(raw, f.pos, pad)):
+            continue
+        end = (f.pos + pad) // 8 + 2
+        if end * 8 <= limit:
+            f.end = end
+
+
+def _decode_chunk(payloads: list[bytes]) -> list:
+    out: list = [None] * len(payloads)
+    infos, parts, offs = [], [], []
+    off = 0
+    for i, p in enumerate(payloads):
+        try:
+            si, pos = _read_metadata(p)
+        except FlacError:
+            continue
+        infos.append((i, si))
+        parts.append(memoryview(p)[pos:])
+        offs.append(off)
+        off += len(p) - pos
+    if not infos:
+        return out
+    raw = b"".join(parts)
+    del parts
+    buf = np.frombuffer(raw, np.uint8)
+    stops = offs[1:] + [off]
+    limits = [s * 8 for s in stops]
+    # byte-aligned sync candidates: 0xFF then 0xF8/0xF9
+    cand = np.flatnonzero(buf[:-1] == 0xFF)
+    cand = cand[(buf[cand + 1] & 0xFE) == 0xF8]
+    owner = np.searchsorted(np.asarray(offs), cand, side="right") - 1
+    frames = []
+    for c, s in zip(cand.tolist(), owner.tolist()):
+        f = _parse_candidate(raw, c, stops[s], infos[s][1], s)
+        if f is not None:
+            frames.append(f)
+    _decode_bodies(raw, _windows(raw), frames, limits)
+    at = {f.start: f for f in frames if f.end >= 0}
+    chains = []
+    for s, (_, si) in enumerate(infos):
+        chain, cur, decoded = [], offs[s], 0
+        while decoded < si["total"]:
+            f = at.get(cur)
+            if (
+                f is None
+                or f.stream != s
+                or (f.blocking == 0 and f.num != len(chain))
+                or (f.blocking == 1 and f.num != decoded)
+                or decoded + f.bs > si["total"]
+            ):
+                chain = None
+                break
+            chain.append(f)
+            decoded += f.bs
+            cur = f.end
+        chains.append(chain)
+    framed = [f for ch in chains if ch for f in ch]
+    if framed:
+        ends = np.array([f.end for f in framed], np.int64)
+        got = _crc16_many(buf, np.array([f.start for f in framed], np.int64), ends - 2)
+        want = (buf[ends - 2].astype(np.uint16) << 8) | buf[ends - 1]
+        for f, ok in zip(framed, (got == want).tolist()):
+            if not ok:
+                f.end = -1
+    for s, chain in enumerate(chains):
+        if chain is None or any(f.end < 0 for f in chain):
+            continue
+        i, si = infos[s]
+        try:
+            out[i] = _finish(
+                [_subframe_samples(f.sub, f.bs, f.body) for f in chain], si
+            )
+        except FlacError:
+            pass
+    return out
+
+
+def decode_flac_batch(payloads: list[bytes]) -> list:
+    """decode_flac over many payloads at once -> per payload the same
+    (pcm, sr) decode_flac returns, or None where the batch path did not
+    accept the stream (the caller decodes those with decode_flac, which
+    also supplies the error text). Payloads are decoded in chunks of
+    about _CHUNK_BYTES so the batch-wide arrays stay bounded."""
+    out: list = []
+    chunk: list[bytes] = []
+    size = 0
+    for p in payloads:
+        if chunk and size + len(p) > _CHUNK_BYTES:
+            out += _decode_chunk(chunk)
+            chunk, size = [], 0
+        chunk.append(p)
+        size += len(p)
+    if chunk:
+        out += _decode_chunk(chunk)
+    return out

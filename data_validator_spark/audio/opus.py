@@ -246,6 +246,8 @@ def _parse_head(packet: bytes) -> dict:
             )
         if len(packet) < 21 + channels:
             raise OpusError("channel mapping table truncated")
+        if len(packet) != 21 + channels:
+            raise OpusError("trailing bytes after the channel mapping table")
         streams = packet[19]
         coupled = packet[20]
         if streams < 1:

@@ -221,12 +221,11 @@ def _quality_batch(
     codec_col = pdf["codec"].to_numpy()
     payloads = pdf["bytes"].to_numpy()
     skips = pdf["skip"].to_numpy()
-    for i in range(n):
-        if skips[i]:
+    outcomes = codecs.decode_batch(codec_col, payloads, plugins, skips)
+    for i, res in enumerate(outcomes):
+        if res is None:
             continue
-        try:
-            pcm, sr = codecs.decode(codec_col[i], payloads[i], plugins=plugins)
-        except codecs.PcmUnsupportedError:
+        if isinstance(res, codecs.PcmUnsupportedError):
             # metadata tier: real container checks, no PCM features
             meta = codecs.inspect_metadata(
                 codec_col[i], payloads[i], inspectors=inspectors
@@ -247,9 +246,10 @@ def _quality_batch(
                             meta["duration_ms"] / 1000.0 * in_sr
                         ))
             continue
-        except codecs.CodecError as e:
-            out["decode_error"][i] = str(e)
+        if isinstance(res, codecs.CodecError):
+            out["decode_error"][i] = str(res)
             continue
+        pcm, sr = res
         out["container_sr"][i] = sr
         out["n_samples"][i] = len(pcm)
         ref = synth.reference_pcm(str(clip_ids[i]), int(sr), len(pcm))

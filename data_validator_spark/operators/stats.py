@@ -329,8 +329,14 @@ def kll_drift(
 
     def _sql_lit(v: float) -> str:
         # repr is the shortest round-trip decimal; Java parses it back
-        # to the identical IEEE-754 double
-        return "CAST('NaN' AS DOUBLE)" if v != v else repr(float(v)) + "D"
+        # to the identical IEEE-754 double. Non-finite values have no
+        # literal form, so they are cast from their string names.
+        v = float(v)
+        if v != v:
+            return "CAST('NaN' AS DOUBLE)"
+        if v in (float("inf"), float("-inf")):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        return repr(v) + "D"
 
     parts: list[DataFrame] = []
     for lo in range(0, len(col_names), max(1, chunk_cols)):

@@ -392,3 +392,12 @@ def test_lpc_kernel_bit_exact_vs_naive_all_orders():
         res = rng.integers(-80, 80, 400)
         got = flac._restore_lpc(warm, coefs, shift, res)
         assert np.array_equal(got, naive(warm, coefs, shift, res)), order
+
+
+@pytest.mark.parametrize("order", [0, 33, -1])
+def test_encode_rejects_lpc_order_outside_range(order):
+    """lpc_order outside 1..32 does not fit the 6-bit subframe type:
+    the encoder refuses it instead of writing a corrupt stream."""
+    pcm = np.sin(np.linspace(0, 30, 5000)).astype(np.float32) * 0.5
+    with pytest.raises(FlacError, match="lpc_order"):
+        encode_flac(pcm, 16000, lpc_order=order)

@@ -157,6 +157,31 @@ def test_inspect_mapping_family_rules():
     )["error"]
 
 
+
+def test_mapping_table_exact_length():
+    """Families 1 and 255 carry exactly `channels` mapping bytes after
+    the 21-byte head: bytes past the table are rejected like family 0's
+    trailing table, and the fixture's own family-1 heads stay valid."""
+    for family, channels in ((1, 2), (255, 3)):
+        clean = opus.encode_ogg_opus(
+            9600, 48000, seed=1, mapping_family=family, channels=channels
+        )
+        assert opus.inspect(clean)["error"] is None
+        pages, off = [], 0
+        while off < len(clean):
+            nsegs = clean[off + 26]
+            end = off + 27 + nsegs + sum(clean[off + 27 : off + 27 + nsegs])
+            pages.append(clean[off:end])
+            off = end
+        nsegs = pages[0][26]
+        pkt = pages[0][27 + nsegs :]
+        assert len(pkt) == 21 + channels
+        serial = struct.unpack_from("<I", pages[0], 14)[0]
+        padded = opus._page(0x02, 0, serial, 0, [pkt + b"\x00"])
+        err = opus.inspect(padded + b"".join(pages[1:]))["error"]
+        assert err is not None and "trailing bytes" in err
+
+
 def test_inspect_opustags_rules():
     """RFC 7845 §5.2: comment-length overflow, missing '=', invalid key
     charset, and non-UTF-8 payloads are all container rejects; a valid

@@ -479,3 +479,16 @@ def test_pinned_value_report_all_null_column_emits_row(spark):
     assert d["n_nonnull"] == 0
     assert d["mode_value"] is None and d["mode_share"] is None
     assert got["live"]["n_nonnull"] == 3
+
+
+def test_kll_drift_handles_infinite_values(spark):
+    """A column holding +inf and -inf yields infinite probe quantiles;
+    their SQL literals must parse, and a sketch compared with itself
+    stays near zero drift."""
+    vals = [float("-inf")] * 5 + [float(i) for i in range(200)] + [float("inf")] * 5
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
+    sk = stats.kll_sketches(df, ["x"])
+    row = stats.kll_drift(sk, sk).first()
+    assert row.column_name == "x"
+    assert row.ks == pytest.approx(0.0, abs=0.01)
+    assert row.n_base == row.n_cur == len(vals)

@@ -1,23 +1,30 @@
 #!/usr/bin/env python
-"""LPC-heavy FLAC decode bench (round-5 verdict task 7).
+"""FLAC decode bench: an LPC-heavy corpus and a FIXED-subframe corpus.
 
 Our own encoder emits FIXED subframes (vectorized cumsum inversion),
 so the ordinary bench never exercises _restore_lpc — but externally
-produced (libFLAC) files are mostly LPC subframes, and the round-4
-verdict flagged that path as the first bottleneck an LPC-heavy corpus
-would hit at 100x. This tool synthesizes such a corpus with
-encode_flac(lpc_order=) and measures:
+produced (libFLAC) files are mostly LPC subframes. This tool
+synthesizes such a corpus with encode_flac(lpc_order=), plus a
+FIXED-subframe corpus shaped like the clips fixture (its sample-rate
+mix, clips of --fixed-ms), and measures:
 
-  1. single-process decode throughput with the batched restoration
+  1. for both corpora, single-process decode throughput of the batch
+     decoder (flac.decode_flac_batch over groups of --batch-rows
+     payloads, the FLAC rows of one Arrow batch) against per-payload
+     decode_flac, with an MD5 over all decoded PCM of each mode
+     (bit-exact when equal) and the count of streams the batch path
+     left to decode_flac;
+  2. on the LPC corpus, the batched LPC restoration
      (_restore_lpc_batch, stacks same-shape subframes into one numpy
      recurrence) vs the per-subframe python kernel (_LPC_BATCH_MIN
      forced past every group size), plus the LPC-restore share of
      total decode time under each mode;
-  2. the Spark path: run_audio_checks (full decode + MD5 + SNR vs
-     reference) over the same corpus on local[N].
+  3. the Spark path: run_audio_checks (full decode + MD5 + SNR vs
+     reference) over the LPC corpus on local[N].
 
 Usage: python tools/flac_lpc_bench.py [--clips 200] [--secs 20]
-       [--order 8] [--cores 8]
+       [--order 8] [--cores 8] [--fixed-clips 1024] [--fixed-ms 600]
+       [--batch-rows 128] [--skip-spark]
 """
 
 from __future__ import annotations
@@ -42,6 +49,64 @@ def build_corpus(n_clips: int, secs: float, sr: int, order: int):
         pcm = synth.reference_pcm(cid, sr, int(secs * sr))
         rows.append((cid, flac.encode_flac(pcm, sr, lpc_order=order)))
     return rows
+
+
+def build_fixed_corpus(n_clips: int, ms: int):
+    """FIXED-subframe streams at the clips fixture's sample-rate mix."""
+    from data_validator_spark.audio import flac, synth
+    from data_validator_spark.fixtures.clips import _SR_CHOICES, _SR_PROBS
+
+    rng = np.random.default_rng(0)
+    rows = []
+    for i in range(n_clips):
+        cid = f"fixed-{i:05d}"
+        sr = int(rng.choice(_SR_CHOICES, p=_SR_PROBS))
+        pcm = synth.reference_pcm(cid, sr, int(ms * sr / 1000))
+        rows.append((cid, flac.encode_flac(pcm, sr)))
+    return rows
+
+
+def batch_vs_payload(rows, batch_rows: int) -> dict:
+    """Msamples/s of decode_flac_batch (groups of batch_rows payloads)
+    and of per-payload decode_flac over the same corpus."""
+    import hashlib
+
+    from data_validator_spark.audio import flac
+
+    payloads = [p for _, p in rows]
+    out = {}
+    for mode in ("per_payload", "batch"):
+        md5 = hashlib.md5()
+        n_samples = fallbacks = 0
+        t0 = time.monotonic()
+        if mode == "batch":
+            decoded = []
+            for lo in range(0, len(payloads), batch_rows):
+                group = payloads[lo : lo + batch_rows]
+                for p, got in zip(group, flac.decode_flac_batch(group)):
+                    if got is None:
+                        fallbacks += 1
+                        got = flac.decode_flac(p)
+                    decoded.append(got)
+        else:
+            decoded = [flac.decode_flac(p) for p in payloads]
+        wall = time.monotonic() - t0
+        for pcm, sr in decoded:
+            md5.update(pcm.tobytes())
+            md5.update(str(sr).encode())
+            n_samples += len(pcm)
+        out[mode] = {
+            "wall_sec": round(wall, 3),
+            "msamples_per_sec": round(n_samples / wall / 1e6, 2),
+            "pcm_md5": md5.hexdigest(),
+        }
+        if mode == "batch":
+            out[mode]["fallback_streams"] = fallbacks
+    out["speedup"] = round(
+        out["per_payload"]["wall_sec"] / out["batch"]["wall_sec"], 2
+    )
+    out["bit_exact"] = out["per_payload"]["pcm_md5"] == out["batch"]["pcm_md5"]
+    return out
 
 
 def timed_decode(rows, batch: bool) -> dict:
@@ -137,6 +202,9 @@ def main() -> None:
     ap.add_argument("--sr", type=int, default=16000)
     ap.add_argument("--order", type=int, default=8)
     ap.add_argument("--cores", type=int, default=8)
+    ap.add_argument("--fixed-clips", type=int, default=1024)
+    ap.add_argument("--fixed-ms", type=int, default=600)
+    ap.add_argument("--batch-rows", type=int, default=128)
     ap.add_argument("--skip-spark", action="store_true")
     args = ap.parse_args()
 
@@ -153,6 +221,7 @@ def main() -> None:
 
     single = timed_decode(rows, batch=False)
     batched = timed_decode(rows, batch=True)
+    fixed = build_fixed_corpus(args.fixed_clips, args.fixed_ms)
     out = {
         "clips": args.clips,
         "secs_per_clip": args.secs,
@@ -163,6 +232,13 @@ def main() -> None:
         "decode_single_kernel": single,
         "decode_batched": batched,
         "batch_speedup": round(single["wall_sec"] / batched["wall_sec"], 2),
+        "lpc_corpus_batch_decode": batch_vs_payload(rows, args.batch_rows),
+        "fixed_corpus": {
+            "clips": args.fixed_clips,
+            "ms_per_clip": args.fixed_ms,
+            "corpus_mb": round(sum(len(p) for _, p in fixed) / 1e6, 1),
+            **batch_vs_payload(fixed, args.batch_rows),
+        },
     }
     if not args.skip_spark:
         out["spark_run_audio_checks"] = spark_pass(rows, args.sr, args.cores)
