@@ -23,7 +23,8 @@ codec in operators/imaging.py:
 
 Everything is vectorized where it is hot: rice encode builds the bit
 array with numpy cumsum/scatter (no per-sample python loop). Two
-decoders share the header, subframe and finishing code:
+decoders share the frame-header, subframe-header, residual-partition-
+header and finishing code:
 
   decode_flac (one stream): rice decode is a two-pass scheme —
       terminator positions hop through a precomputed one-count (rank)
@@ -252,6 +253,18 @@ class _BitWriter:
         return np.packbits(np.concatenate(self.chunks)).tobytes()
 
 
+def _signed_values(bits: np.ndarray, count: int, width: int) -> np.ndarray:
+    """count * width unpacked bits, MSB first -> count width-bit
+    two's-complement values."""
+    if width == 0:
+        return np.zeros(count, np.int64)
+    vals = bits.reshape(count, width).astype(np.int64) @ (
+        np.int64(1) << np.arange(width - 1, -1, -1, dtype=np.int64)
+    )
+    half = np.int64(1) << (width - 1)
+    return np.where(vals >= half, vals - (half << 1), vals)
+
+
 class _BitReader:
     """MSB-first reader over an unpacked bit array, with the 1-bit
     position index that makes bulk rice decode cheap."""
@@ -296,16 +309,12 @@ class _BitReader:
         return q
 
     def read_signed_array(self, count: int, width: int) -> np.ndarray:
-        if width == 0:
-            return np.zeros(count, np.int64)
         end = self.pos + count * width
         if end > self.n:
             raise FlacError("truncated sample block")
-        arr = self.bits[self.pos : end].reshape(count, width).astype(np.int64)
+        vals = _signed_values(self.bits[self.pos : end], count, width)
         self.pos = end
-        vals = arr @ (np.int64(1) << np.arange(width - 1, -1, -1, dtype=np.int64))
-        half = np.int64(1) << (width - 1)
-        return np.where(vals >= half, vals - (half << 1), vals)
+        return vals
 
     def read_rice_array(self, count: int, k: int) -> np.ndarray:
         """count rice(k) codes -> signed residuals. Pass 1 finds each
@@ -770,28 +779,45 @@ def _restore_deferred(blocks: list) -> None:
                 blocks[i] = x << w if w else x
 
 
-def _read_residual(r: _BitReader, bs: int, order: int) -> np.ndarray:
+def _read_residual_header(r, bs: int, order: int) -> tuple[int, int]:
+    """Residual coding method and partition order -> (bits of each
+    partition's rice parameter, partition order)."""
     method = r.read(2)
     if method > 1:
         raise FlacError("reserved residual coding method")
-    plen = 4 + method
-    escape = (1 << plen) - 1
     po = r.read(4)
     nparts = 1 << po
     if bs % nparts or (bs >> po) <= order and nparts > 1:
         raise FlacError("invalid rice partition order")
+    return 4 + method, po
+
+
+def _partition_len(bs: int, po: int, order: int, j: int) -> int:
+    """Residual count of partition j (the warm-up samples precede the
+    first partition's residuals)."""
+    cnt = (bs >> po) - (order if j == 0 else 0)
+    if cnt < 0:
+        raise FlacError("invalid rice partition order")
+    return cnt
+
+
+def _read_partition_param(r, plen: int, cnt: int):
+    """A partition's rice parameter -> (k, None), or (None, its values)
+    for an escaped partition (a 5-bit width, then cnt raw values)."""
+    k = r.read(plen)
+    if k == (1 << plen) - 1:
+        return None, r.read_signed_array(cnt, r.read(5))
+    return k, None
+
+
+def _read_residual(r: _BitReader, bs: int, order: int) -> np.ndarray:
+    plen, po = _read_residual_header(r, bs, order)
     parts = []
-    for p in range(nparts):
-        cnt = (bs >> po) - (order if p == 0 else 0)
-        if cnt < 0:
-            raise FlacError("invalid rice partition order")
-        k = r.read(plen)
-        if k == escape:
-            width = r.read(5)
-            parts.append(r.read_signed_array(cnt, width))
-        else:
-            parts.append(r.read_rice_array(cnt, k))
-    return parts[0] if nparts == 1 else np.concatenate(parts)
+    for j in range(1 << po):
+        cnt = _partition_len(bs, po, order, j)
+        k, vals = _read_partition_param(r, plen, cnt)
+        parts.append(r.read_rice_array(cnt, k) if vals is None else vals)
+    return parts[0] if len(parts) == 1 else np.concatenate(parts)
 
 
 def _sign_extend(v: int, width: int) -> int:
@@ -975,7 +1001,7 @@ def _read_frame_header(r, si: dict, frame_start: int,
         raise FlacError("unsupported sample-size code")
     if r.pos % 8:
         raise FlacError("frame header misaligned")
-    if r.read(8) != crc8(r.raw[frame_start : r.pos // 8 - 1].tobytes()):
+    if r.read(8) != crc8(r.raw[frame_start : r.pos // 8 - 1]):
         raise FlacError("frame header CRC-8 mismatch")
     return bs, bps, blocking, num
 
@@ -1040,47 +1066,9 @@ def decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
 # is left to decode_flac, so accepted streams decode bit-identically
 # and rejected ones get the serial error text.
 
-_HDR_SLICE = 256  # bytes given to one candidate's header parse
 _CHUNK_BYTES = 4 << 20  # payload bytes decoded together (working-set cap)
 _WALK_BLOCK = 128  # lockstep steps between residual extractions
 _UNARY1: np.ndarray | None = None  # built on first use, see _rice_walk
-
-
-class _ScalarBitReader:
-    """_BitReader's scalar interface over a short byte string held as
-    one python int: cheaper than unpacking bits for a header parse."""
-
-    def __init__(self, data: bytes) -> None:
-        self.raw = np.frombuffer(data, np.uint8)
-        self.v = int.from_bytes(data, "big")
-        self.n = len(data) * 8
-        self.pos = 0
-
-    def read(self, k: int) -> int:
-        if k == 0:
-            return 0
-        if self.pos + k > self.n:
-            raise FlacError("truncated stream")
-        self.pos += k
-        return (self.v >> (self.n - self.pos)) & ((1 << k) - 1)
-
-    def read_unary(self) -> int:
-        rest = self.v & ((1 << (self.n - self.pos)) - 1)
-        if not rest:
-            raise FlacError("truncated unary code")
-        t = self.n - rest.bit_length()
-        q = t - self.pos
-        self.pos = t + 1
-        return q
-
-    def read_signed_array(self, count: int, width: int) -> np.ndarray:
-        if self.pos + count * width > self.n:
-            raise FlacError("truncated sample block")
-        return np.array(
-            [_sign_extend(self.read(width), width) if width else 0
-             for _ in range(count)],
-            np.int64,
-        )
 
 
 class _Frame:
@@ -1090,7 +1078,7 @@ class _Frame:
     __slots__ = ("stream", "start", "bs", "blocking", "num", "sub", "pos",
                  "plen", "po", "parts", "body", "end")
 
-    def __init__(self, stream, start, bs, blocking, num, sub, pos):
+    def __init__(self, stream, start, bs, blocking, num, sub, pos, plen, po):
         self.stream = stream
         self.start = start  # byte offset of the sync code
         self.bs = bs
@@ -1098,33 +1086,48 @@ class _Frame:
         self.num = num
         self.sub = sub
         self.pos = pos  # next unread bit
-        self.plen = self.po = 0
+        self.plen = plen  # bits of a partition's rice parameter
+        self.po = po  # partition order
         self.parts: list = []
         self.body = None
         self.end = -1  # byte offset after the CRC-16; -1 = rejected
 
 
-def _bits_at(raw: bytes, pos: int, k: int) -> int:
-    """k bits (k >= 1) at absolute bit position pos of raw."""
-    b0 = pos >> 3
-    b1 = (pos + k + 7) >> 3
-    v = int.from_bytes(raw[b0:b1], "big")
-    return (v >> (b1 * 8 - pos - k)) & ((1 << k) - 1)
+class _RawBitReader:
+    """_BitReader's scalar interface at absolute bit positions of a
+    chunk buffer, for one candidate frame: bits up to `limit` (its
+    stream's end) are readable, and nothing is unpacked ahead."""
 
+    def __init__(self, raw: bytes, pos: int, limit: int) -> None:
+        self.raw = raw
+        self.pos = pos
+        self.limit = limit
 
-def _signed_at(raw: bytes, pos: int, count: int, width: int) -> np.ndarray:
-    """count width-bit two's-complement values at bit position pos."""
-    if width == 0:
-        return np.zeros(count, np.int64)
-    end = pos + count * width
-    b0 = pos >> 3
-    bits = np.unpackbits(np.frombuffer(raw[b0 : (end + 7) >> 3], np.uint8))
-    arr = bits[pos - b0 * 8 : end - b0 * 8].reshape(count, width)
-    vals = arr.astype(np.int64) @ (
-        np.int64(1) << np.arange(width - 1, -1, -1, dtype=np.int64)
-    )
-    half = np.int64(1) << (width - 1)
-    return np.where(vals >= half, vals - (half << 1), vals)
+    def read(self, k: int) -> int:
+        if k == 0:
+            return 0
+        if self.pos + k > self.limit:
+            raise FlacError("truncated stream")
+        b0 = self.pos >> 3
+        b1 = (self.pos + k + 7) >> 3
+        v = int.from_bytes(self.raw[b0:b1], "big")
+        self.pos += k
+        return (v >> (b1 * 8 - self.pos)) & ((1 << k) - 1)
+
+    def read_unary(self) -> int:
+        q = 0
+        while not self.read(1):
+            q += 1
+        return q
+
+    def read_signed_array(self, count: int, width: int) -> np.ndarray:
+        pos, end = self.pos, self.pos + count * width
+        if end > self.limit:
+            raise FlacError("truncated sample block")
+        self.pos = end
+        b0 = pos >> 3
+        bits = np.unpackbits(np.frombuffer(self.raw[b0 : (end + 7) >> 3], np.uint8))
+        return _signed_values(bits[pos - b0 * 8 : end - b0 * 8], count, width)
 
 
 def _windows(raw: bytes) -> np.ndarray:
@@ -1209,32 +1212,24 @@ def _rice_walk(W: np.ndarray, starts: np.ndarray, ks: np.ndarray,
     )
 
 
-def _parse_candidate(raw: bytes, c: int, stop: int, si: dict, stream: int):
+def _parse_candidate(raw: bytes, c: int, limit: int, si: dict, stream: int):
     """Header, subframe header and residual header of the candidate
-    frame at byte c (the stream's audio ends at byte stop) -> _Frame,
+    frame at byte c (the stream's audio ends at bit limit) -> _Frame,
     or None when the serial decoder would reject a frame here."""
-    r = _ScalarBitReader(raw[c : min(c + _HDR_SLICE, stop)])
+    r = _RawBitReader(raw, c * 8, limit)
     try:
-        bs, bps, blocking, num = _read_frame_header(r, si, 0)
+        bs, bps, blocking, num = _read_frame_header(r, si, c)
         if bs > si["max_bs"]:
             # the longest lane sets the walk's step count, so a false
             # candidate may not outgrow the stream's declared frames
             return None
         sub = _read_subframe_header(r, bs, bps)
-        f = _Frame(stream, c, bs, blocking, num, sub, c * 8 + r.pos)
+        plen = po = 0
         if sub.kind >= 8:
-            method = r.read(2)
-            if method > 1:
-                return None
-            po = r.read(4)
-            nparts = 1 << po
-            if bs % nparts or (bs >> po) <= sub.order and nparts > 1:
-                return None
-            f.plen, f.po = 4 + method, po
-            f.pos = c * 8 + r.pos
+            plen, po = _read_residual_header(r, bs, sub.order)
     except FlacError:
         return None
-    return f
+    return _Frame(stream, c, bs, blocking, num, sub, r.pos, plen, po)
 
 
 def _decode_bodies(raw: bytes, W: np.ndarray, frames: list, limits: list) -> None:
@@ -1246,41 +1241,36 @@ def _decode_bodies(raw: bytes, W: np.ndarray, frames: list, limits: list) -> Non
     pending = []
     for f in frames:
         if f.sub.kind == 1:
-            end = f.pos + f.bs * f.sub.eff
-            if end > limits[f.stream]:
+            r = _RawBitReader(raw, f.pos, limits[f.stream])
+            try:
+                f.body = r.read_signed_array(f.bs, f.sub.eff)
+            except FlacError:
                 f.pos = -1
                 continue
-            f.body = _signed_at(raw, f.pos, f.bs, f.sub.eff)
-            f.pos = end
+            f.pos = r.pos
         elif f.sub.kind >= 8:
             pending.append(f)
     j = 0
     while pending:
         walk, going = [], []
         for f in pending:
-            limit = limits[f.stream]
-            cnt = (f.bs >> f.po) - (f.sub.order if j == 0 else 0)
-            if f.pos + f.plen > limit:
+            r = _RawBitReader(raw, f.pos, limits[f.stream])
+            try:
+                cnt = _partition_len(f.bs, f.po, f.sub.order, j)
+                k, vals = _read_partition_param(r, f.plen, cnt)
+            except FlacError:
                 f.pos = -1
                 continue
-            k = _bits_at(raw, f.pos, f.plen)
-            f.pos += f.plen
-            if k != (1 << f.plen) - 1:
-                if cnt * (k + 1) > limit - f.pos:  # each code takes k+1 bits
+            f.pos = r.pos
+            if vals is None:
+                if cnt * (k + 1) > r.limit - f.pos:  # each code takes k+1 bits
                     f.pos = -1
                     continue
                 if cnt:
                     walk.append((f, k, cnt))
                     continue
-                f.parts.append(np.zeros(0, np.int64))
-            else:  # escaped partition: 5-bit width, then raw values
-                width = _bits_at(raw, f.pos, 5) if f.pos + 5 <= limit else -1
-                end = f.pos + 5 + cnt * width
-                if width < 0 or end > limit:
-                    f.pos = -1
-                    continue
-                f.parts.append(_signed_at(raw, f.pos + 5, cnt, width))
-                f.pos = end
+                vals = np.zeros(0, np.int64)
+            f.parts.append(vals)
             going.append(f)
         if walk:
             ends, parts = _rice_walk(
@@ -1306,12 +1296,14 @@ def _decode_bodies(raw: bytes, W: np.ndarray, frames: list, limits: list) -> Non
     for f in frames:
         if f.pos < 0 or (f.sub.kind >= 8 and f.body is None):
             continue
-        limit = limits[f.stream]
-        pad = (-f.pos) % 8
-        if pad and (f.pos + pad > limit or _bits_at(raw, f.pos, pad)):
+        r = _RawBitReader(raw, f.pos, limits[f.stream])
+        try:
+            if r.read((-f.pos) % 8):
+                continue
+        except FlacError:
             continue
-        end = (f.pos + pad) // 8 + 2
-        if end * 8 <= limit:
+        end = r.pos // 8 + 2
+        if end * 8 <= r.limit:
             f.end = end
 
 
@@ -1333,15 +1325,14 @@ def _decode_chunk(payloads: list[bytes]) -> list:
     raw = b"".join(parts)
     del parts
     buf = np.frombuffer(raw, np.uint8)
-    stops = offs[1:] + [off]
-    limits = [s * 8 for s in stops]
+    limits = [s * 8 for s in offs[1:] + [off]]  # stream end bits
     # byte-aligned sync candidates: 0xFF then 0xF8/0xF9
     cand = np.flatnonzero(buf[:-1] == 0xFF)
     cand = cand[(buf[cand + 1] & 0xFE) == 0xF8]
     owner = np.searchsorted(np.asarray(offs), cand, side="right") - 1
     frames = []
     for c, s in zip(cand.tolist(), owner.tolist()):
-        f = _parse_candidate(raw, c, stops[s], infos[s][1], s)
+        f = _parse_candidate(raw, c, limits[s], infos[s][1], s)
         if f is not None:
             frames.append(f)
     _decode_bodies(raw, _windows(raw), frames, limits)

@@ -43,6 +43,14 @@ def _per_row(codec, payload):
 
 
 def _assert_batch_equals_rows(codec_col, payloads):
+    # decode_batch turns a crash of the batch decoder into per-row
+    # fallback, which would hide it here: call it directly as well
+    flac_rows = [bytes(p) for c, p in zip(codec_col, payloads)
+                 if c == "flac" and p is not None]
+    for p, g in zip(flac_rows, flac.decode_flac_batch(flac_rows)):
+        if g is not None:
+            pcm, sr = flac.decode_flac(p)
+            assert g[1] == sr and g[0].tobytes() == pcm.tobytes()
     got = list(codecs.decode_batch(codec_col, payloads))
     assert len(got) == len(payloads)
     for c, p, g in zip(codec_col, payloads, got):
@@ -315,14 +323,17 @@ def test_flac_override_wins_over_batch_path(body, monkeypatch):
     built-in batch FLAC path in the UDF bodies."""
     run = _BODIES[body]
     pdf = _batch_frame(_fixture_stream(2, 16000, 3000))
-    calls = []
+    calls, batch_calls = [], []
 
     def fake(payload):
         calls.append(len(payload))
         return np.zeros(7, np.float32), 16000
 
     def no_batch(payloads):
-        raise AssertionError("built-in batch path ran under an override")
+        # records rather than raises: decode_batch would swallow an
+        # error and fall back to the override row by row
+        batch_calls.append(len(payloads))
+        return [None] * len(payloads)
 
     monkeypatch.setattr(flac, "decode_flac_batch", no_batch)
     out = run(pdf, {"flac": fake})
@@ -331,6 +342,7 @@ def test_flac_override_wins_over_batch_path(body, monkeypatch):
     monkeypatch.setitem(codecs._DECODERS, "flac", fake)
     out = run(pdf, None)
     assert len(calls) == 2 and list(out["n_samples"][:2]) == [7, 7]
+    assert batch_calls == []
 
 
 @pytest.mark.parametrize("body", sorted(_BODIES))

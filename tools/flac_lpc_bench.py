@@ -6,10 +6,10 @@ so the ordinary bench never exercises _restore_lpc — but externally
 produced (libFLAC) files are mostly LPC subframes. This tool
 synthesizes such a corpus with encode_flac(lpc_order=), plus a
 FIXED-subframe corpus shaped like the clips fixture (its sample-rate
-mix, clips of --fixed-ms), and measures:
+mix, FIXED_CLIPS clips of FIXED_MS), and measures:
 
   1. for both corpora, single-process decode throughput of the batch
-     decoder (flac.decode_flac_batch over groups of --batch-rows
+     decoder (flac.decode_flac_batch over groups of BATCH_ROWS
      payloads, the FLAC rows of one Arrow batch) against per-payload
      decode_flac, with an MD5 over all decoded PCM of each mode
      (bit-exact when equal) and the count of streams the batch path
@@ -23,8 +23,7 @@ mix, clips of --fixed-ms), and measures:
      reference) over the LPC corpus on local[N].
 
 Usage: python tools/flac_lpc_bench.py [--clips 200] [--secs 20]
-       [--order 8] [--cores 8] [--fixed-clips 1024] [--fixed-ms 600]
-       [--batch-rows 128] [--skip-spark]
+       [--order 8] [--cores 8] [--skip-spark]
 """
 
 from __future__ import annotations
@@ -38,6 +37,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
+
+# The FIXED corpus copies the clips_mixed workload: clips of at most
+# max_synth_ms=600, and about 128 FLAC rows per Arrow batch (a 512-row
+# batch at the default codec mix's 25% FLAC share).
+FIXED_CLIPS = 1024
+FIXED_MS = 600
+BATCH_ROWS = 128
 
 
 def build_corpus(n_clips: int, secs: float, sr: int, order: int):
@@ -202,9 +208,6 @@ def main() -> None:
     ap.add_argument("--sr", type=int, default=16000)
     ap.add_argument("--order", type=int, default=8)
     ap.add_argument("--cores", type=int, default=8)
-    ap.add_argument("--fixed-clips", type=int, default=1024)
-    ap.add_argument("--fixed-ms", type=int, default=600)
-    ap.add_argument("--batch-rows", type=int, default=128)
     ap.add_argument("--skip-spark", action="store_true")
     args = ap.parse_args()
 
@@ -221,7 +224,7 @@ def main() -> None:
 
     single = timed_decode(rows, batch=False)
     batched = timed_decode(rows, batch=True)
-    fixed = build_fixed_corpus(args.fixed_clips, args.fixed_ms)
+    fixed = build_fixed_corpus(FIXED_CLIPS, FIXED_MS)
     out = {
         "clips": args.clips,
         "secs_per_clip": args.secs,
@@ -232,12 +235,12 @@ def main() -> None:
         "decode_single_kernel": single,
         "decode_batched": batched,
         "batch_speedup": round(single["wall_sec"] / batched["wall_sec"], 2),
-        "lpc_corpus_batch_decode": batch_vs_payload(rows, args.batch_rows),
+        "lpc_corpus_batch_decode": batch_vs_payload(rows, BATCH_ROWS),
         "fixed_corpus": {
-            "clips": args.fixed_clips,
-            "ms_per_clip": args.fixed_ms,
+            "clips": FIXED_CLIPS,
+            "ms_per_clip": FIXED_MS,
             "corpus_mb": round(sum(len(p) for _, p in fixed) / 1e6, 1),
-            **batch_vs_payload(fixed, args.batch_rows),
+            **batch_vs_payload(fixed, BATCH_ROWS),
         },
     }
     if not args.skip_spark:
