@@ -240,9 +240,13 @@ def run_audio_checks(
             skip.alias("skip"),
         )
     )
-    out = clips.withColumn("audio_bytes_null", F.col("bytes").isNull()).withColumn(
-        "_audio", res
+    # the UDF result lands in one struct column that every output
+    # below reads by field, so the Arrow stage runs once per row
+    out = clips.withColumns(
+        {"audio_bytes_null": F.col("bytes").isNull(), "_audio": res}
     )
+    a = F.col("_audio")
+    cols: dict = {}
     if quality:
         from data_validator_spark.audio.quality import (
             _FEATURE_FIELDS,
@@ -252,22 +256,18 @@ def run_audio_checks(
             quality_labels_expr,
         )
 
-        for name, _ in _FEATURE_FIELDS:
-            out = out.withColumn(name, F.col(f"_audio.{name}"))
+        cols.update({name: a.getField(name) for name, _ in _FEATURE_FIELDS})
         if embed_mels:
-            out = out.withColumn("embedding", F.col("_audio.embedding"))
-        out = out.withColumn(
-            "_quality_labels",
-            quality_labels_expr(
-                "_audio",
-                clipping_max if clipping_max is not None else CLIPPING_MAX_RATIO,
-                dc_max if dc_max is not None else DC_OFFSET_MAX,
-                silence_max if silence_max is not None else SILENCE_MAX_RATIO,
-                upsample_min_ratio=upsample_min_ratio,
-                min_effective_bits=min_effective_bits,
-                lufs_min=lufs_min,
-                lufs_max=lufs_max,
-            ),
+            cols["embedding"] = a.getField("embedding")
+        cols["_quality_labels"] = quality_labels_expr(
+            "_audio",
+            clipping_max if clipping_max is not None else CLIPPING_MAX_RATIO,
+            dc_max if dc_max is not None else DC_OFFSET_MAX,
+            silence_max if silence_max is not None else SILENCE_MAX_RATIO,
+            upsample_min_ratio=upsample_min_ratio,
+            min_effective_bits=min_effective_bits,
+            lufs_min=lufs_min,
+            lufs_max=lufs_max,
         )
     # per-codec threshold override: the audio analogue of the
     # reference's per-task rt-bound overrides (core_models.py:169-202)
@@ -279,53 +279,35 @@ def run_audio_checks(
             F.col("codec") == codec_name, F.lit(float(lo))
         ).otherwise(thresh)
     snr_name = f"audio_snr_below_{int(snr_min)}db"
-    return (
-        out.withColumn("audio_decode_error", F.col("_audio.decode_error"))
-        .withColumn("audio_snr_db", F.col("_audio.snr_db"))
+    decoded = a.getField("decode_error").isNull()
+    snr = a.getField("snr_db")
+    csr = a.getField("container_sr")
+    cols.update({
+        "audio_decode_error": a.getField("decode_error"),
+        "audio_snr_db": snr,
         # decoded length + container rate surface so downstream rules
         # (duration consistency, transcript plausibility) can use the
         # DECODED duration instead of trusting dur_ms metadata
-        .withColumn("audio_n_samples", F.col("_audio.n_samples"))
-        .withColumn("audio_container_sr", F.col("_audio.container_sr"))
-        .withColumn(
-            "_snr_label",
-            F.when(
-                F.col("_audio.decode_error").isNull()
-                & (F.col("_audio.snr_db") < thresh),
-                F.concat(
-                    F.lit(snr_name + "("),
-                    F.round(F.col("_audio.snr_db"), 1).cast("string"),
-                    F.lit(")"),
-                ),
+        "audio_n_samples": a.getField("n_samples"),
+        "audio_container_sr": csr,
+        "_snr_label": F.when(
+            decoded & (snr < thresh),
+            F.concat(
+                F.lit(snr_name + "("), F.round(snr, 1).cast("string"), F.lit(")")
             ),
-        )
-        .withColumn(
-            "_container_sr_label",
-            F.when(
-                F.col("_audio.decode_error").isNull()
-                & F.col("sr_hz").isNotNull()
-                & (F.col("_audio.container_sr") != F.col("sr_hz")),
-                F.concat(
-                    F.lit("bytes_sr_mismatch("),
-                    F.col("_audio.container_sr").cast("string"),
-                    F.lit(")"),
-                ),
+        ),
+        "_container_sr_label": F.when(
+            decoded & F.col("sr_hz").isNotNull() & (csr != F.col("sr_hz")),
+            F.concat(F.lit("bytes_sr_mismatch("), csr.cast("string"), F.lit(")")),
+        ),
+        "_pcm_unsupported_label": F.when(
+            decoded & a.getField("pcm_unsupported"),
+            F.concat(
+                F.lit("audio_codec_unsupported_pcm("), F.col("codec"), F.lit(")")
             ),
-        )
-        .withColumn(
-            "_pcm_unsupported_label",
-            F.when(
-                F.col("_audio.decode_error").isNull()
-                & F.col("_audio.pcm_unsupported"),
-                F.concat(
-                    F.lit("audio_codec_unsupported_pcm("),
-                    F.col("codec"),
-                    F.lit(")"),
-                ),
-            ),
-        )
-        .drop("_audio")
-    )
+        ),
+    })
+    return out.withColumns(cols).drop("_audio")
 
 
 def duration_consistency_label(

@@ -86,33 +86,27 @@ def winner_selection(
     grp_n = F.count(F.lit(1)).over(w)
     pick_rank = F.row_number().over(w_pick)
 
-    out = (
-        df.withColumn("_n_complete", n_complete)
-        .withColumn("_grp_n", grp_n)
-        .withColumn("_pick", pick_rank)
+    out = df.withColumns(
+        {"_n_complete": n_complete, "_grp_n": grp_n, "_pick": pick_rank}
     )
+    multi = (F.col("_grp_n") > 1) & (F.col("_n_complete") >= 2)
     is_winner = (F.col("_grp_n") == 1) | (
         (F.col("_n_complete") <= 1) & (F.col("_pick") == 1)
     )
-    out = out.withColumn("is_winner", is_winner)
-    out = out.withColumn(
-        "dedup_msg",
-        F.when(
-            (F.col("_grp_n") > 1) & (F.col("_n_complete") >= 2), F.lit(multi_label)
-        ).when((F.col("_grp_n") > 1) & ~F.col("is_winner"), F.lit(dup_label)),
-    )
     # suffix targets: losers, or everyone in the >=2-completed branch
-    suffix_target = (F.col("_grp_n") > 1) & (
-        (F.col("_n_complete") >= 2) | ~F.col("is_winner")
-    )
-    out = out.withColumn("_sfx_t", suffix_target)
-    w_sfx = Window.partitionBy(*keys, "_sfx_t").orderBy(ts.asc(), F.col(id_col).asc())
+    sfx_t = (F.col("_grp_n") > 1) & (multi | ~is_winner)
+    w_sfx = Window.partitionBy(*keys, sfx_t).orderBy(ts.asc(), F.col(id_col).asc())
     sfx_rank = F.row_number().over(w_sfx)
-    out = out.withColumn(
-        suffixed_col,
-        F.when(
-            F.col("_sfx_t"),
+    cols = {
+        suffixed_col: F.when(
+            sfx_t,
             F.concat(F.col(suffixed_col), F.lit(":dup"), sfx_rank.cast("string")),
         ).otherwise(F.col(suffixed_col)),
-    )
-    return out.drop("_n_complete", "_grp_n", "_pick", "_sfx_t")
+        "is_winner": is_winner,
+        "dedup_msg": F.when(multi, F.lit(multi_label)).when(
+            (F.col("_grp_n") > 1) & ~is_winner, F.lit(dup_label)
+        ),
+    }
+    # the columns, in order, of df.withColumns(cols): temps drop out
+    names = df.columns + [c for c in cols if c not in df.columns]
+    return out.select(*[cols[c].alias(c) if c in cols else c for c in names])

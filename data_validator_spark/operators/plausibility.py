@@ -89,16 +89,17 @@ def transcript_plausibility(
             decoded_s,
         ).otherwise(dur_s)
 
-    out = df.withColumn("words", words.cast("long")).withColumn(
-        "wps",
-        F.when(
-            (words >= min_words) & dur_s.isNotNull(),
-            F.round(words.cast("double") / dur_s, 4),
-        ),
+    out = df.withColumns(
+        {
+            "words": words.cast("long"),
+            "wps": F.when(
+                (words >= min_words) & dur_s.isNotNull(),
+                F.round(words.cast("double") / dur_s, 4),
+            ),
+        }
     )
-    out = out.withColumn(
-        "_wps_label",
-        F.when(
+    labels = {
+        "_wps_label": F.when(
             F.col("wps").isNotNull()
             & ((F.col("wps") < wps_min) | (F.col("wps") > wps_max)),
             F.concat(
@@ -108,26 +109,24 @@ def transcript_plausibility(
                 F.col("words").cast("string"),
                 F.lit(")"),
             ),
-        ),
-    )
+        )
+    }
     if silence_ratio_col is not None and silence_ratio_col in df.columns:
         share = F.when(
             F.col(silence_ratio_col).isNotNull(),
             F.round(1.0 - F.col(silence_ratio_col), 4),
         )
-        out = out.withColumn("speech_share", share).withColumn(
-            "_speech_label",
-            F.when(
-                (F.col("words") >= min_words)
-                & F.col("speech_share").isNotNull()
-                & (F.col("speech_share") < speech_share_min),
-                F.concat(
-                    F.lit("speech_share_low(share="),
-                    F.round("speech_share", 2).cast("string"),
-                    F.lit(",words="),
-                    F.col("words").cast("string"),
-                    F.lit(")"),
-                ),
+        labels["speech_share"] = share
+        labels["_speech_label"] = F.when(
+            (F.col("words") >= min_words)
+            & share.isNotNull()
+            & (share < speech_share_min),
+            F.concat(
+                F.lit("speech_share_low(share="),
+                F.round(share, 2).cast("string"),
+                F.lit(",words="),
+                F.col("words").cast("string"),
+                F.lit(")"),
             ),
         )
-    return out
+    return out.withColumns(labels)

@@ -37,6 +37,33 @@ class ColumnSpec:
     n_buckets: int = 20
 
 
+def _sql_str(s: str) -> str:
+    """Spark SQL string literal for `s`. With the default literal
+    parsing (spark.sql.parser.escapedStringLiterals off) a backslash
+    starts an escape sequence, so it is doubled along with the quote."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def _sql_ref(name: str) -> str:
+    """SQL text that resolves like F.col(name): dots step into struct
+    fields; a name that already carries backticks is taken as written."""
+    if "`" in name:
+        return name
+    return ".".join(f"`{part}`" for part in name.split("."))
+
+
+def _sql_double(v: float) -> str:
+    # repr is the shortest round-trip decimal; Java parses it back to
+    # the identical IEEE-754 double. Non-finite values have no literal
+    # form, so they are cast from their string names.
+    v = float(v)
+    if v != v:
+        return "CAST('NaN' AS DOUBLE)"
+    if v in (float("inf"), float("-inf")):
+        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+    return repr(v) + "D"
+
+
 def profile(
     df: DataFrame,
     specs: Sequence[ColumnSpec],
@@ -74,44 +101,34 @@ def profile(
     import math
 
     lgk = min(21, max(4, math.ceil(2 * math.log2(1.04 / hll_rsd))))
-    aggs: list[Column] = [F.count(F.lit(1)).alias("_n")]
-    for s in specs:
-        c = F.col(s.name)
+    # built as SQL text: one parse per expression instead of a py4j
+    # round trip per Column call (see kll_drift)
+    aggs = ["count(1) AS _n"]
+    structs = []
+    for i, sp in enumerate(specs):
+        c = _sql_ref(sp.name)
         aggs += [
-            F.sum(c.isNull().cast("long")).alias(f"{s.name}__nulls"),
-            F.min(c).cast("string").alias(f"{s.name}__min"),
-            F.max(c).cast("string").alias(f"{s.name}__max"),
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(c.cast("string"), F.lit(lgk))
-            ).alias(f"{s.name}__hll"),
+            f"sum(CAST({c} IS NULL AS BIGINT)) AS _nulls{i}",
+            f"CAST(min({c}) AS STRING) AS _min{i}",
+            f"CAST(max({c}) AS STRING) AS _max{i}",
+            f"hll_sketch_estimate(hll_sketch_agg(CAST({c} AS STRING), {lgk})) AS _hll{i}",
         ]
-        if s.kind == "numeric" and not use_td:
+        q = "CAST(NULL AS ARRAY<DOUBLE>)"
+        if sp.kind == "numeric" and not use_td:
+            probes = ", ".join(_sql_double(x) for x in quantiles)
             aggs.append(
-                F.percentile_approx(
-                    c.cast("double"), list(quantiles), 10_000
-                ).alias(f"{s.name}__q")
+                f"percentile_approx(CAST({c} AS DOUBLE), array({probes}), 10000) AS _q{i}"
             )
-    wide = df.agg(*aggs)
-    # unpivot wide row -> long rows, still fully in the plan (no collect)
-    structs = [
-        F.struct(
-            F.lit(s.name).alias("column_name"),
-            (F.col(f"{s.name}__nulls") / F.greatest(F.col("_n"), F.lit(1))).alias(
-                "null_rate"
-            ),
-            F.col(f"{s.name}__min").alias("min_val"),
-            F.col(f"{s.name}__max").alias("max_val"),
-            F.col(f"{s.name}__hll").alias("approx_distinct"),
-            (
-                F.col(f"{s.name}__q")
-                if s.kind == "numeric" and not use_td
-                else F.lit(None).cast("array<double>")
-            ).alias("quantiles"),
-            F.col("_n").alias("n_rows"),
+            q = f"_q{i}"
+        structs.append(
+            f"named_struct('column_name', {_sql_str(sp.name)},"
+            f" 'null_rate', _nulls{i} / greatest(_n, 1),"
+            f" 'min_val', _min{i}, 'max_val', _max{i},"
+            f" 'approx_distinct', _hll{i}, 'quantiles', {q}, 'n_rows', _n)"
         )
-        for s in specs
-    ]
-    out = wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    wide = df.selectExpr(*aggs)
+    # unpivot wide row -> long rows, still fully in the plan (no collect)
+    out = wide.selectExpr(f"inline(array({', '.join(structs)}))")
     if not use_td:
         return out
     from .tdigest import quantile_array_readout, tdigest_profile
@@ -327,17 +344,6 @@ def kll_drift(
     per_col = {r.column_name: r._probes for r in probe_rows}
     col_names = sorted(per_col)
 
-    def _sql_lit(v: float) -> str:
-        # repr is the shortest round-trip decimal; Java parses it back
-        # to the identical IEEE-754 double. Non-finite values have no
-        # literal form, so they are cast from their string names.
-        v = float(v)
-        if v != v:
-            return "CAST('NaN' AS DOUBLE)"
-        if v in (float("inf"), float("-inf")):
-            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-        return repr(v) + "D"
-
     parts: list[DataFrame] = []
     for lo in range(0, len(col_names), max(1, chunk_cols)):
         chunk = col_names[lo : lo + chunk_cols]
@@ -346,15 +352,14 @@ def kll_drift(
             # dedup probes (repeated quantiles at heavy ties) to shrink
             # the expression; order is irrelevant under max()
             gaps = [
-                f"abs(kll_sketch_get_rank_double(_kb, {_sql_lit(v)})"
-                f" - kll_sketch_get_rank_double(_kc, {_sql_lit(v)}))"
+                f"abs(kll_sketch_get_rank_double(_kb, {_sql_double(v)})"
+                f" - kll_sketch_get_rank_double(_kc, {_sql_double(v)}))"
                 for v in sorted(set(per_col[col_name]))
             ]
             body = gaps[0] if len(gaps) == 1 else (
                 "greatest(" + ", ".join(gaps) + ")"
             )
-            esc = col_name.replace("'", "''")
-            arms.append(f"WHEN '{esc}' THEN {body}")
+            arms.append(f"WHEN {_sql_str(col_name)} THEN {body}")
         ks_sql = (
             "CASE column_name "
             + " ".join(arms)
@@ -381,14 +386,19 @@ def kll_drift(
     return parts[0]
 
 
+def _bucket_sql(spec: ColumnSpec) -> str:
+    c = _sql_ref(spec.name)
+    if spec.kind != "numeric":
+        return f"CAST({c} AS STRING)"
+    w = (spec.bucket_hi - spec.bucket_lo) / spec.n_buckets
+    raw = f"floor((CAST({c} AS DOUBLE) - {_sql_double(spec.bucket_lo)}) / {_sql_double(w)})"
+    return f"CAST(greatest(-1, least({raw}, {int(spec.n_buckets)})) AS STRING)"
+
+
 def bucketize(spec: ColumnSpec) -> Column:
     """Fixed-grid bucket id for a numeric column: floor((x-lo)/w) with
     underflow/overflow buckets; NULL rows excluded by histogram()."""
-    c = F.col(spec.name).cast("double")
-    w = (spec.bucket_hi - spec.bucket_lo) / spec.n_buckets
-    raw = F.floor((c - F.lit(spec.bucket_lo)) / F.lit(w))
-    clamped = F.greatest(F.lit(-1), F.least(raw, F.lit(spec.n_buckets)))
-    return clamped.cast("string")
+    return F.expr(_bucket_sql(spec))
 
 
 def histogram(df: DataFrame, specs: Sequence[ColumnSpec]) -> DataFrame:
@@ -397,19 +407,13 @@ def histogram(df: DataFrame, specs: Sequence[ColumnSpec]) -> DataFrame:
     Numeric columns bucket on the spec's fixed grid (so two snapshots
     are comparable); categorical columns bucket on the value itself.
     """
-    pairs = [
-        F.struct(
-            F.lit(s.name).alias("column_name"),
-            (
-                bucketize(s)
-                if s.kind == "numeric"
-                else F.col(s.name).cast("string")
-            ).alias("bucket"),
-        )
+    pairs = ", ".join(
+        f"named_struct('column_name', {_sql_str(s.name)}, 'bucket', {_bucket_sql(s)})"
         for s in specs
-    ]
-    exploded = df.select(F.explode(F.array(*pairs)).alias("p")).select("p.*")
-    exploded = exploded.filter(F.col("bucket").isNotNull())
+    )
+    exploded = df.selectExpr(
+        f"inline(filter(array({pairs}), p -> p.bucket IS NOT NULL))"
+    )
     counts = exploded.groupBy("column_name", "bucket").agg(
         F.count(F.lit(1)).alias("cnt")
     )

@@ -12,33 +12,57 @@ are diverted BEFORE the audio stage so no Python time is spent on
 undecodable rows; the payload itself is read exactly once (scan-side
 decode; missing-payload detection happens there too) and is never
 shuffled — see run_validation's docstring.
+
+Building the plan is driver work: every DataFrame is analyzed eagerly
+against the whole lineage and every Column call is a Py4J round trip.
+So every label source (soft/warning rules, duplicate clip_id,
+transcript reference, audio outcomes, plausibility) contributes a
+label Column, and ONE projection at the end folds them into
+validation_msg / warning_msg / valid in their fixed order. The
+transcript reference is ONE left join against a lookup that carries
+the winner transcript and the hit / multiple-completed flags
+together (_ref_lookup).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_validator_spark.audio.checks import run_audio_checks
-from data_validator_spark.operators import dedup, drift, referential, stats
+from data_validator_spark.operators import dedup, drift, stats
 from data_validator_spark.rules import clip_rules
-from data_validator_spark.rules.compiler import append_messages, apply_rules, split_hard
+from data_validator_spark.rules.compiler import (
+    hard_predicate,
+    hard_violations,
+    message_columns,
+    split_hard,
+)
 
 ENTITY = "clip"
 
 
-def _bytes_missing_cols() -> list:
-    """Normalized error columns for the bytes_missing hard violation
-    (mirrors required('bytes') from clip_hard_rules; the label and
-    echoed value match hard_violations' output for that rule)."""
+def _audio_invalid_cols() -> list:
+    """Normalized error columns for the two hard violations the decode
+    stage finds, per audio result row: bytes_missing (mirrors
+    required('bytes') from clip_hard_rules; the label and echoed value
+    match hard_violations' output for that rule), else
+    audio_decode_failed with the decoder's error text."""
+    missing = F.col("audio_bytes_null")
+
+    def pick(if_missing: str, otherwise) -> Column:
+        return F.when(missing, F.lit(if_missing)).otherwise(otherwise)
+
     return [
         F.lit(ENTITY).alias("entity"),
-        F.lit("bytes_missing").alias("rule"),
+        pick("bytes_missing", F.lit("audio_decode_failed")).alias("rule"),
         F.lit("bytes").alias("invalid_key"),
-        F.lit("null").alias("invalid_value"),
-        F.lit("audio payload").alias("expected_value"),
+        pick("null", F.col("audio_decode_error")).alias("invalid_value"),
+        pick("audio payload", F.lit("decodable audio payload")).alias(
+            "expected_value"
+        ),
     ]
 
 
@@ -79,19 +103,6 @@ class ValidationConfig:
     wps_max: float = 6.0
     speech_share_min: float = 0.3
     snr_min_db: float = 30.0
-    decode_partitions: int | None = None  # repartition before decode stage
-    # co-batch the decode stage by this LOW-CARDINALITY key (e.g.
-    # "codec": same-codec Arrow batches keep the decode branch
-    # predictable) instead of the uniform (clip_id, order_col) hash.
-    # Only consulted when decode_partitions is set. A hot key value
-    # (one codec owning most of the corpus — the north star's skewed
-    # codec/sr_hz case) would turn this into a straggler, so the plan
-    # consults skew.skew_report first and salts the repartition ONLY
-    # when the advisory fires (auto_salt_decode below).
-    decode_partition_key: str | None = None
-    auto_salt_decode: bool = True
-    salt_imbalance_max: float = 10.0  # advisory threshold (max/mean)
-    decode_salt_n: int = 16
     # persist the post-audio row set (bytes already dropped) so the
     # fan-out actions (verdict rollup, violation write, stats) do not
     # re-run the decode stage once per action. Never caches `bytes`.
@@ -141,15 +152,20 @@ class ValidationResult:
             df.unpersist()
 
 
-def _ref_winner_transcripts(transcripts_ref: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Winner-selection over the reference transcript table.
+def _ref_lookup(transcripts_ref: DataFrame) -> DataFrame:
+    """Winner-selection over the reference transcript table, as ONE
+    lookup keyed by clip_id:
 
-    Returns (winners, ambiguous):
-      winners   — one authoritative (clip_id, transcript) per clip
-      ambiguous — clip_ids whose group hit the >=2-completed branch
-                  (no winner exists; clips referencing them inherit
-                  `multiple_completed_transcripts`, the J6
-                  message-inheritance join of SURVEY.md §2.3)
+      (clip_id, _ref_transcript, _ref_hit, _ref_multi)
+
+    A winner row (one authoritative transcript per clip) has _ref_hit
+    true and its transcript; a clip whose group hit the >=2-completed
+    branch (no winner exists; clips referencing it inherit
+    `multiple_completed_transcripts`, the J6 message-inheritance join
+    of SURVEY.md §2.3) has _ref_multi true. The branch table makes the
+    two sets disjoint, so one left join of the clips against this
+    lookup carries the referential, inherited-dedup and equality
+    inputs together.
     """
     w = dedup.winner_selection(
         transcripts_ref,
@@ -159,16 +175,20 @@ def _ref_winner_transcripts(transcripts_ref: DataFrame) -> tuple[DataFrame, Data
         id_col="clip_id",
         suffixed_col="clip_id",  # losers get clip_id:dupN -> drop out of join
     )
-    winners = w.filter(F.col("is_winner")).select(
-        F.col("clip_id"), F.col("transcript").alias("_ref_transcript")
-    )
-    ambiguous = (
-        w.filter(F.col("dedup_msg") == "multiple_completed_transcripts")
-        # recover the base id: strip the ':dupN' suffix added above
-        .select(F.regexp_replace("clip_id", r":dup\d+$", "").alias("clip_id"))
+    win = F.col("is_winner")
+    return (
+        w.filter(win | (F.col("dedup_msg") == "multiple_completed_transcripts"))
+        .select(
+            # ambiguous rows are all suffixed: recover the base id
+            F.when(win, F.col("clip_id"))
+            .otherwise(F.regexp_replace("clip_id", r":dup\d+$", ""))
+            .alias("clip_id"),
+            F.when(win, F.col("transcript")).alias("_ref_transcript"),
+            F.when(win, F.lit(True)).alias("_ref_hit"),
+            F.when(~win, F.lit(True)).alias("_ref_multi"),
+        )
         .dropDuplicates(["clip_id"])
     )
-    return winners, ambiguous
 
 
 def run_validation(
@@ -200,14 +220,20 @@ def run_validation(
     id_cols = ["clip_id", cfg.order_col, cfg.partition_col]
     _persisted: list[DataFrame] = []
     nonbytes = [r for r in rules if r.invalid_key != "bytes"]
+    nobytes = clips.drop("bytes")
+    # labels from the non-rule sources, in message order; every one is
+    # a NULL-or-nonempty string Column folded into the messages by the
+    # single projection at the end of the plan
+    soft_labels: list = [F.col("_dup_label")]
+    warning_labels: list = []
+    label_cols = ["_dup_label"]
 
     audio_res = None
     if cfg.check_audio:
         # ---- tier 1a: non-payload hard failures -> side-channel, from
         # a column-pruned scan that never touches `bytes`
-        from data_validator_spark.rules.compiler import hard_predicate
-
-        _, invalid = split_hard(clips.drop("bytes"), nonbytes, ENTITY, id_cols)
+        diverted = hard_predicate(nonbytes)
+        invalid = hard_violations(nobytes, nonbytes, ENTITY, id_cols)
 
         # ---- scan-side decode: the ONLY read of `bytes` in the run —
         # scan -> minimal projection -> Arrow UDF -> small result
@@ -226,47 +252,8 @@ def run_validation(
             "codec",
             "sr_hz",
             "bytes",
-            hard_predicate(nonbytes).alias("_skip_decode"),
+            diverted.alias("_skip_decode"),
         )
-        if cfg.decode_partitions:
-            # optional: decouple decode parallelism from file layout
-            # (shuffles the projected payload — only worth it when file
-            # splits are pathologically few/skewed)
-            if cfg.decode_partition_key:
-                # co-batched decode keyed on a low-cardinality column;
-                # the skew advisory (operators/skew.skew_report — one
-                # bytes-free hash aggregate, one driver-side row)
-                # decides whether the hot-key salt is NEEDED, so the
-                # uniform case pays no salt and the Zipf case never
-                # stragglers
-                from data_validator_spark.operators import skew as _skew
-
-                key = cfg.decode_partition_key
-                do_salt = False
-                if cfg.auto_salt_decode:
-                    rep = _skew.skew_report(
-                        clips.select(key),
-                        key,
-                        imbalance_max=cfg.salt_imbalance_max,
-                    ).collect()[0]
-                    do_salt = bool(rep["salt_recommended"])
-                if do_salt:
-                    audio_in = _skew.add_salt(
-                        audio_in,
-                        ["clip_id", cfg.order_col],
-                        cfg.decode_salt_n,
-                    )
-                    audio_in = audio_in.repartition(
-                        cfg.decode_partitions, key, "_salt"
-                    ).drop("_salt")
-                else:
-                    audio_in = audio_in.repartition(
-                        cfg.decode_partitions, key
-                    )
-            else:
-                audio_in = audio_in.repartition(
-                    cfg.decode_partitions, "clip_id", cfg.order_col
-                )
         audio_res = run_audio_checks(
             audio_in,
             snr_min=cfg.snr_min_db,
@@ -282,35 +269,36 @@ def run_validation(
             audio_res = audio_res.persist()
             _persisted.append(audio_res)
 
-        # ---- tier 1b: bytes_missing, recovered from the decode stage
-        # via the structured audio_bytes_null flag (never by matching
-        # the CodecError message text); covers diverted rows too
-        bytes_missing = audio_res.filter(F.col("audio_bytes_null")).select(
-            *id_cols, *_bytes_missing_cols()
-        )
-        invalid = invalid.unionByName(bytes_missing)
+        # ---- tier 1b: bytes_missing and audio_decode_failed,
+        # recovered from the decode stage via the structured
+        # audio_bytes_null flag (never by matching the CodecError
+        # message text; covers diverted rows too) and the decode error.
+        # A decode failure is a hard-tier outcome discovered late; it
+        # is sourced from audio_res (not v) so its violation survives
+        # even though the dedup/ref joins run on v.
+        audio_invalid = audio_res.filter(
+            F.col("audio_bytes_null") | F.col("audio_decode_error").isNotNull()
+        ).select(*id_cols, *_audio_invalid_cols())
+        invalid = invalid.unionByName(audio_invalid)
 
         # bytes-free metadata branch joins the small audio results;
         # the join is inner on the unique (clip_id, order_col) key —
-        # see the input contract in the docstring. Diverted rows drop
-        # out on the meta side; null-payload rows are dropped here.
-        meta = clips.drop("bytes").filter(~hard_predicate(nonbytes))
-        v = meta.join(
-            audio_res.drop(cfg.partition_col, "_skip_decode"),
+        # see the input contract in the docstring. Diverted and
+        # null-payload rows drop out on the audio side.
+        v = nobytes.join(
+            audio_res.filter(
+                ~F.col("_skip_decode") & ~F.col("audio_bytes_null")
+            ).drop(cfg.partition_col, "_skip_decode"),
             ["clip_id", cfg.order_col],
             "inner",
         )
-        v = v.filter(~F.col("audio_bytes_null"))
     else:
-        ok, invalid = split_hard(clips, rules, ENTITY, id_cols)
-        v = ok
-
-    # ---- tier 2: soft/warning metadata rules (pure Column exprs)
-    v = apply_rules(v, rules, ENTITY)
+        v, invalid = split_hard(clips, rules, ENTITY, id_cols)
+    # the message columns take this place in the output schema
+    msg_after = v.columns
 
     # ---- uniqueness on clip_id (first occurrence wins, A3/A4)
     v = dedup.flag_duplicates(v, ["clip_id"], cfg.order_col)
-    v = append_messages(v, ENTITY, F.col("_dup_label")).drop("_dup_label")
 
     ref_winners = None
     orphan_transcripts = None
@@ -319,73 +307,49 @@ def run_validation(
         # reference rows pointing at no clip, from a bytes-free
         # clip-id projection (raw transcripts_ref rows carry base ids;
         # :dupN suffixing only happens inside winner_selection)
-        clip_ids = clips.select("clip_id").dropDuplicates(["clip_id"])
         orphan_transcripts = transcripts_ref.join(
-            clip_ids, "clip_id", "left_anti"
+            clips.select("clip_id"), "clip_id", "left_anti"
         )
-        ref_winners, ambiguous = _ref_winner_transcripts(transcripts_ref)
-        # inherited dedup message (J6): clip references a transcript
-        # group with >=2 completed rows -> no authoritative transcript
-        ambiguous = ambiguous.withColumn("_ref_multi", F.lit(True))
-        v = v.join(ambiguous, "clip_id", "left")
-        v = append_messages(
-            v,
-            ENTITY,
-            F.when(F.col("_ref_multi"), F.lit("multiple_completed_transcripts")),
+        ref = _ref_lookup(transcripts_ref)
+        ref_winners = ref.filter(F.col("_ref_hit")).select(
+            "clip_id", "_ref_transcript"
         )
-        # referential: clip must have a transcript-side row (J3 anti-join form)
-        v = referential.flag_missing_ref(
-            v, ref_winners, "clip_id", "transcript_ref_missing"
-        )
-        v = append_messages(
-            v,
-            ENTITY,
-            F.when(F.col("_ref_multi").isNull(), F.col("_ref_label")),
-        ).drop("_ref_label", "_ref_multi")
-        # transcript equality vs the winning reference row
-        v = v.join(ref_winners, "clip_id", "left")
-        mismatch = F.when(
-            F.col("_ref_transcript").isNotNull()
-            & F.col("transcript").isNotNull()
-            & (F.trim("transcript") != "")
-            & (F.col("transcript") != F.col("_ref_transcript")),
-            F.lit("transcript_mismatch"),
-        )
-        v = append_messages(v, ENTITY, mismatch).drop("_ref_transcript")
+        v = v.join(ref, "clip_id", "left")
+        multi = F.col("_ref_multi")
+        ref_t = F.col("_ref_transcript")
+        soft_labels += [
+            # inherited dedup message (J6): clip references a transcript
+            # group with >=2 completed rows -> no authoritative transcript
+            F.when(multi, F.lit("multiple_completed_transcripts")),
+            # referential: clip must have a transcript-side row (J3)
+            F.when(
+                multi.isNull() & F.col("_ref_hit").isNull(),
+                F.lit("transcript_ref_missing"),
+            ),
+            # transcript equality vs the winning reference row
+            F.when(
+                ref_t.isNotNull()
+                & F.col("transcript").isNotNull()
+                & (F.trim("transcript") != "")
+                & (F.col("transcript") != ref_t),
+                F.lit("transcript_mismatch"),
+            ),
+        ]
+        label_cols += ["_ref_transcript", "_ref_hit", "_ref_multi"]
 
     # ---- tier 3: audio-invariant outcomes (results precomputed in the
     # scan-side decode stage; only small columns are handled here)
     if cfg.check_audio:
-        # decode failure is a hard-tier outcome discovered late: divert.
-        # Sourced from audio_res (not v) so a decode-failed row's
-        # violation survives even though dedup/ref joins ran on v.
-        decode_invalid = audio_res.filter(
-            F.col("audio_decode_error").isNotNull() & ~F.col("audio_bytes_null")
-        ).select(
-            *id_cols,
-            F.lit(ENTITY).alias("entity"),
-            F.lit("audio_decode_failed").alias("rule"),
-            F.lit("bytes").alias("invalid_key"),
-            F.col("audio_decode_error").alias("invalid_value"),
-            F.lit("decodable audio payload").alias("expected_value"),
-        )
-        invalid = invalid.unionByName(decode_invalid)
         v = v.filter(F.col("audio_decode_error").isNull())
-        v = append_messages(v, ENTITY, F.col("_snr_label")).drop("_snr_label")
-        v = append_messages(
-            v, ENTITY, F.col("_container_sr_label"), warning=True
-        ).drop("_container_sr_label")
         # metadata-tier codecs (opus): container checks were REAL and
         # passed, but the SNR invariant could not be evaluated — an
-        # honest warning, never a synthetic pass (and never a hard
-        # fail: the clip may be perfectly fine)
-        v = append_messages(
-            v, ENTITY, F.col("_pcm_unsupported_label"), warning=True
-        ).drop("_pcm_unsupported_label")
-        if cfg.check_quality:
-            v = append_messages(v, ENTITY, F.col("_quality_labels")).drop(
-                "_quality_labels"
-            )
+        # honest warning (_pcm_unsupported_label), never a synthetic
+        # pass (and never a hard fail: the clip may be perfectly fine)
+        audio_soft = ["_snr_label"] + (["_quality_labels"] if cfg.check_quality else [])
+        audio_warn = ["_container_sr_label", "_pcm_unsupported_label"]
+        soft_labels += [F.col(c) for c in audio_soft]
+        warning_labels += [F.col(c) for c in audio_warn]
+        label_cols += audio_soft + audio_warn
     if cfg.check_plausibility:
         from data_validator_spark.operators.plausibility import (
             transcript_plausibility,
@@ -403,14 +367,22 @@ def run_validation(
             wps_max=cfg.wps_max,
             speech_share_min=cfg.speech_share_min,
         )
-        v = append_messages(v, ENTITY, F.col("_wps_label")).drop("_wps_label")
-        if with_quality:
-            v = append_messages(v, ENTITY, F.col("_speech_label")).drop(
-                "_speech_label"
-            )
-    # bytes is a no-op drop when check_audio (never joined back);
+        plaus = ["_wps_label"] + (["_speech_label"] if with_quality else [])
+        soft_labels += [F.col(c) for c in plaus]
+        label_cols += plaus
+
+    # ---- the one message projection: rule labels then every other
+    # source's, in the order above; it also drops the label inputs.
+    # bytes only survives here when check_audio is off;
     # audio_bytes_null is all-false on the validated side by now
-    v = v.drop("bytes", "audio_bytes_null")
+    msgs = message_columns(rules, ENTITY, soft_labels, warning_labels)
+    gone = set(label_cols) | {"bytes", "audio_bytes_null"}
+    keep = [c for c in v.columns if c not in gone]
+    v = v.select(
+        *[c for c in keep if c in msg_after],
+        *[col.alias(name) for name, col in msgs.items()],
+        *[c for c in keep if c not in msg_after],
+    )
     if cfg.persist:
         v = v.persist()
         _persisted.append(v)
@@ -434,19 +406,20 @@ def run_validation(
     verdicts = (
         soft_counts.join(hard_counts, part, "full_outer")
         .fillna(0, subset=["n_rows", "n_soft_invalid", "n_warnings", "n_hard_invalid"])
-        .withColumn(
-            "status",
-            F.when(
-                (F.col("n_hard_invalid") == 0) & (F.col("n_soft_invalid") == 0),
-                F.lit("pass"),
-            ).otherwise(F.lit("fail")),
+        .withColumns(
+            {
+                "status": F.when(
+                    (F.col("n_hard_invalid") == 0) & (F.col("n_soft_invalid") == 0),
+                    F.lit("pass"),
+                ).otherwise(F.lit("fail")),
+                "rule_version": F.lit(cfg.rule_version),
+            }
         )
-        .withColumn("rule_version", F.lit(cfg.rule_version))
     )
 
     # ---- column stats + histograms (single-pass each, SURVEY §2.4 A5/A10/A11)
-    summary = stats.profile(clips.drop("bytes"), list(cfg.stats_specs))
-    hist = stats.histogram(clips.drop("bytes"), list(cfg.hist_specs))
+    summary = stats.profile(nobytes, list(cfg.stats_specs))
+    hist = stats.histogram(nobytes, list(cfg.hist_specs))
 
     drift_df = None
     if baseline_hist is not None:

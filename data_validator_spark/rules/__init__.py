@@ -11,9 +11,9 @@ from data_validator_spark.rules.spec import (  # noqa: F401
     required_when,
 )
 from data_validator_spark.rules.compiler import (  # noqa: F401
-    append_messages,
     apply_rules,
     hard_violations,
+    message_columns,
 )
 from data_validator_spark.rules.derive import (  # noqa: F401
     rules_from_suggestions,

@@ -21,12 +21,34 @@ from pyspark.sql import functions as F
 from data_validator_spark.rules.spec import HARD, SOFT, WARNING, Rule
 
 
-def _joined(rules: Sequence[Rule], tier: str) -> Column:
+def _joined(rules: Sequence[Rule], tier: str, extra: Sequence[Column] = ()) -> Column:
     msgs = [F.when(r.predicate, r.message) for r in rules if r.tier == tier]
+    msgs += list(extra)
     if not msgs:
         return F.lit("")
     # concat_ws drops NULLs -> only violated labels remain, in order
     return F.concat_ws(";", *msgs)
+
+
+def message_columns(
+    rules: Sequence[Rule],
+    entity: str,
+    soft_labels: Sequence[Column] = (),
+    warning_labels: Sequence[Column] = (),
+) -> dict[str, Column]:
+    """validation_msg / warning_msg / valid Columns for the soft and
+    warning tiers: each tier's rule labels in declaration order, then
+    its extra labels — NULL-or-nonempty string Columns from sources
+    outside the rule list (dedup, reference joins, audio checks). One
+    ';'-join per message gives the same string as appending the
+    sources one at a time (the reference appends, never overwrites —
+    core_models.py:663-715), in one projection."""
+    vmsg = _joined(rules, SOFT, soft_labels)
+    return {
+        f"validation_msg_{entity}": vmsg,
+        f"warning_msg_{entity}": _joined(rules, WARNING, warning_labels),
+        f"valid_{entity}": vmsg == "",
+    }
 
 
 def apply_rules(
@@ -35,15 +57,7 @@ def apply_rules(
     """Append validation_msg / warning_msg / valid columns (soft +
     warning tiers). Hard rules are handled by `hard_violations` /
     `split_hard`."""
-    vmsg = _joined(rules, SOFT)
-    wmsg = _joined(rules, WARNING)
-    return df.withColumns(
-        {
-            f"validation_msg_{entity}": vmsg,
-            f"warning_msg_{entity}": wmsg,
-            f"valid_{entity}": vmsg == "",
-        }
-    )
+    return df.withColumns(message_columns(rules, entity))
 
 
 def hard_predicate(rules: Sequence[Rule]) -> Column:
@@ -91,17 +105,12 @@ def hard_violations(
             for r in hard
         ]
     )
-    return (
-        df.filter(hard_predicate(rules))
-        .select(*id_cols, F.explode(F.filter(errs, lambda x: x.isNotNull())).alias("e"))
-        .select(
-            *id_cols,
-            F.lit(entity).alias("entity"),
-            F.col("e.rule").alias("rule"),
-            F.col("e.invalid_key").alias("invalid_key"),
-            F.col("e.invalid_value").alias("invalid_value"),
-            F.col("e.expected_value").alias("expected_value"),
-        )
+    # a row failing no hard rule carries an empty array: inline emits
+    # nothing for it
+    return df.select(
+        *id_cols,
+        F.lit(entity).alias("entity"),
+        F.inline(F.filter(errs, lambda x: x.isNotNull())),
     )
 
 
@@ -111,17 +120,3 @@ def split_hard(
     """(rows passing all hard rules, invalid side-channel rows)."""
     pred = hard_predicate(rules)
     return df.filter(~pred), hard_violations(df, rules, entity, id_cols)
-
-
-def append_messages(
-    df: DataFrame, entity: str, label: Column, *, warning: bool = False
-) -> DataFrame:
-    """Append a (possibly NULL) label to an existing message column —
-    the reference appends, never overwrites (core_models.py:663-715).
-    Recomputes valid_<entity> for soft appends."""
-    col = f"warning_msg_{entity}" if warning else f"validation_msg_{entity}"
-    merged = F.concat_ws(";", F.nullif(F.col(col), F.lit("")), label)
-    out = df.withColumn(col, merged)
-    if not warning:
-        out = out.withColumn(f"valid_{entity}", F.col(col) == "")
-    return out

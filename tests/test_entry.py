@@ -30,6 +30,17 @@ def test_every_query_is_oracle_gated(spark):
         assert "read_parquet" not in sql
 
 
+def test_newest_queries_are_in_the_driver_window():
+    """The correctness gate samples the first 50 queries() entries
+    (_DRIVER_WINDOW); the four highest-numbered queries must be among
+    them."""
+    names = list(entry.queries())
+    newest = sorted(names, key=lambda n: int(n[1:].split("_")[0]))[-4:]
+    assert len(entry._DRIVER_WINDOW) == 50
+    assert names[:50] == entry._DRIVER_WINDOW
+    assert set(newest) <= set(entry._DRIVER_WINDOW), newest
+
+
 def test_sampled_queries_run_small(spark):
     qs = entry.queries()
     for name in ["q01_pricing_summary", "q15_winner_selection", "q25_cosine_topk"]:

@@ -10,7 +10,7 @@ from data_validator_spark.plans.validation import ValidationConfig, run_validati
 
 @pytest.fixture(scope="module")
 def result(spark, clips, transcripts_ref):
-    r = run_validation(clips, transcripts_ref, cfg=ValidationConfig(decode_partitions=16))
+    r = run_validation(clips, transcripts_ref, cfg=ValidationConfig())
     r.validated.cache()
     r.invalid.cache()
     return r

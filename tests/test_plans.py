@@ -172,62 +172,6 @@ def test_small_dim_join_broadcasts(spark, clips, transcripts_ref):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
 
 
-def test_auto_salt_decode_fires_only_on_hot_key(spark):
-    """Zipf-hot codec fixture: the decode repartition is salted ONLY
-    when skew_report's advisory fires; a balanced mix keeps the plain
-    key repartition (no wasted salt shuffle width). Outcomes must be
-    identical either way — salt changes placement, not results."""
-    import numpy as np
-
-    from data_validator_spark.audio import codecs as _codecs
-    from data_validator_spark.audio import synth as _synth
-    from data_validator_spark.plans import ValidationConfig, run_validation
-
-    def mk(codec_of):
-        rows = []
-        for i in range(400):
-            cid = f"s-{i:06d}"
-            codec = codec_of(i)
-            pcm = _synth.reference_pcm(cid, 8000, 400)
-            rows.append(
-                (cid, i, _codecs.encode(codec, pcm, 8000), 8000, 50,
-                 codec, _synth.reference_transcript(cid))
-            )
-        import datetime as dt
-
-        return spark.createDataFrame(
-            [(r[0], r[1], r[2], r[3], r[4], r[5], r[6],
-              dt.date(2026, 1, 1 + r[1] % 2)) for r in rows],
-            "clip_id string, ingest_seq long, bytes binary, sr_hz int, "
-            "dur_ms int, codec string, transcript string, ingest_date date",
-        )
-
-    cfg = dict(check_audio=True, decode_partitions=8,
-               decode_partition_key="codec", salt_imbalance_max=1.5)
-
-    # hot: 99% mulaw -> imbalance ~2x vs mean of 2 codecs -> fires
-    hot = mk(lambda i: "mulaw" if i % 100 else "pcm16")
-    res_hot = run_validation(hot, None, cfg=ValidationConfig(**cfg))
-    plan_hot = res_hot.validated._jdf.queryExecution().executedPlan().toString()
-    assert "_salt" in plan_hot
-
-    # balanced 50/50 -> advisory silent -> plain key repartition
-    flat = mk(lambda i: "mulaw" if i % 2 else "pcm16")
-    res_flat = run_validation(flat, None, cfg=ValidationConfig(**cfg))
-    plan_flat = res_flat.validated._jdf.queryExecution().executedPlan().toString()
-    assert "_salt" not in plan_flat
-
-    # salting must not change any outcome
-    n_hot = res_hot.validated.count()
-    res_hot_nosalt = run_validation(
-        hot, None, cfg=ValidationConfig(**{**cfg, "auto_salt_decode": False})
-    )
-    assert n_hot == res_hot_nosalt.validated.count() == 400
-    a = sorted(r["clip_id"] for r in res_hot.validated.collect())
-    b = sorted(r["clip_id"] for r in res_hot_nosalt.validated.collect())
-    assert a == b
-
-
 def test_loudness_and_align_payload_never_shuffled(spark, clips):
     """The loudness/alignment report operators read `bytes` in the
     scan feeding their pandas UDF but must never put the payload into

@@ -492,3 +492,38 @@ def test_kll_drift_handles_infinite_values(spark):
     assert row.column_name == "x"
     assert row.ks == pytest.approx(0.0, abs=0.01)
     assert row.n_base == row.n_cur == len(vals)
+
+
+def test_kll_drift_matches_column_names_with_backslashes(spark):
+    """Column names reach kll_drift's generated CASE as SQL string
+    literals, where a backslash starts an escape sequence: a name
+    containing one must still match its own arm, and a name ending in
+    one must not swallow the closing quote."""
+    names = ["a\\b", "c\\", "it's"]
+    rows = [(float(i), float(i), float(i)) for i in range(100)]
+    df = spark.createDataFrame(rows, [f"x{i}" for i in range(len(names))])
+    df = df.toDF(*names)
+    sk = stats.kll_sketches(df, names)
+    got = {r.column_name: r.ks for r in stats.kll_drift(sk, sk).collect()}
+    assert set(got) == set(names)
+    for name in names:
+        assert got[name] == pytest.approx(0.0, abs=0.01), name
+
+
+def test_profile_and_histogram_keep_unusual_column_names(spark):
+    """profile and histogram echo each column name into their output
+    rows verbatim, backslashes and quotes included."""
+    names = ["a\\b", "c\\", "it's"]
+    df = spark.createDataFrame([(1.0, "u", 2), (3.0, None, 2)], "p double, q string, r int")
+    df = df.toDF(*names)
+    specs = [
+        stats.ColumnSpec(names[0], "numeric", 0.0, 4.0, 4),
+        stats.ColumnSpec(names[1], "categorical"),
+        stats.ColumnSpec(names[2], "categorical"),
+    ]
+    prof = {r.column_name: r for r in stats.profile(df, specs).collect()}
+    assert set(prof) == set(names)
+    assert prof[names[1]].null_rate == 0.5
+    assert prof[names[0]].min_val == "1.0"
+    hist = {(r.column_name, r.bucket): r.cnt for r in stats.histogram(df, specs).collect()}
+    assert hist == {(names[0], "1"): 1, (names[0], "3"): 1, (names[1], "u"): 1, (names[2], "2"): 2}
